@@ -179,7 +179,7 @@ def q08_merge_schema_union(spark, sf_dir):
 
 
 def q09_uuid_whitelist(spark, sf_dir):
-    """P12: --uuids trail whitelist via broadcast semi-join."""
+    """P12: --uuids trail whitelist (a short list is a pushed In filter)."""
     ev = _events(spark, sf_dir)
     ds = TrailDataset(ev.select("uuid", "time", "event_id", "event_type"))
     return ds.select_uuids(["1", "3", "5", "7"]).df

@@ -384,7 +384,8 @@ def test_stale_index_guard_covers_sharded_datasets(spark, tmp_path):
     dataset (shard dirs start with '__shard=' — a naive hidden-dir walk
     would fingerprint them as empty and the stale guard would never
     fire)."""
-    from traildb_spark.dataset import TrailDataset, _data_fingerprint
+    from traildb_spark.dataset import TrailDataset
+    from traildb_spark.fsutil import data_fingerprint
 
     rows = [("aa", 1704067200 + i * 86400, "x" if i % 2 else "y") for i in range(4)]
     from traildb_spark.dataset import normalize_events
@@ -394,8 +395,8 @@ def test_stale_index_guard_covers_sharded_datasets(spark, tmp_path):
     )
     p = str(tmp_path / "sharded")
     ds.finalize(p, time_shard="yyyy-MM-dd")
-    fp1 = _data_fingerprint(spark, p)
-    assert fp1 != _data_fingerprint(spark, str(tmp_path))  # not the empty digest
+    fp1 = data_fingerprint(spark, p)
+    assert fp1 != data_fingerprint(spark, str(tmp_path))  # not the empty digest
 
     TrailDataset.build_index(spark, p, ["f"])
     assert TrailDataset.open(spark, p)._zindex is not None
@@ -407,7 +408,7 @@ def test_stale_index_guard_covers_sharded_datasets(spark, tmp_path):
         )
     )
     ds2.finalize(p, time_shard="yyyy-MM-dd", mode="overwrite")
-    assert _data_fingerprint(spark, p) != fp1
+    assert data_fingerprint(spark, p) != fp1
     assert TrailDataset.open(spark, p)._zindex is None
 
 
@@ -623,3 +624,164 @@ def test_package_roundtrip_single_file(tiny, spark, tmp_path):
         w.addfile(ti, _io.BytesIO(b"a"))
     with pytest.raises(ValueError, match="manifest"):
         import_package(spark, not_pkg, str(tmp_path / "nope2"))
+
+
+# --- point queries: shard bounds, whitelists, lookups, file listing ------
+
+_DAY0 = 1704067200  # 2024-01-01T00:00:00Z
+
+
+@pytest.fixture(scope="module")
+def sharded_db(spark, tmp_path_factory):
+    """12 trails x 4 days x 3 events, daily shards, z-index on ``f``."""
+    from traildb_spark import normalize_events
+
+    rows = [
+        (f"{u:032x}", _DAY0 + d * 86400 + u * 60 + k, "xy"[k % 2])
+        for u in range(12)
+        for d in range(4)
+        for k in range(3)
+    ]
+    ev = normalize_events(spark.createDataFrame(rows, ["uuid", "time", "f"]))
+    path = str(tmp_path_factory.mktemp("points") / "db")
+    TrailDataset(ev).finalize(path, num_buckets=2, time_shard="yyyy-MM-dd")
+    TrailDataset.build_index(spark, path, ["f"])
+    return path, rows
+
+
+def test_one_day_range_plans_one_shard(spark, sharded_db):
+    """Time ranges are end-exclusive: a day-aligned one-day range must plan
+    only that day's shard, on the dataset view, extract and a merged view,
+    and return the rows an unsharded filter returns. (``inputFiles()``
+    cannot show this: a path-based scan prunes partitions only at physical
+    planning, so it lists every file.)"""
+    import re
+
+    from traildb_spark.plans import audit
+
+    path, rows = sharded_db
+    t0 = _DAY0 + 86400
+    f = EventFilter().add_time_range(t0, t0 + 86400)
+    ds = TrailDataset.open(spark, path, use_index=False)
+    views = {
+        "view": ds.with_filter(f).df,
+        "extract": ds.extract(f).df,
+        "merged": TrailDataset.merge([ds, ds]).with_filter(f).df,
+    }
+    for name, df in views.items():
+        plan = audit.explain_str(df)
+        scans = re.findall(r"PartitionFilters: (\[.*\])", plan)
+        assert len(scans) == (2 if name == "merged" else 1), name
+        for pf in scans:
+            bounds = re.findall(r"__shard#\d+ ([<>]=) ([\d-]+)", pf)
+            assert sorted(bounds) == [("<=", "2024-01-02"), (">=", "2024-01-02")], (name, pf)
+    expect = sorted(r for r in rows if t0 <= r[1] < t0 + 86400)
+    got = sorted(map(tuple, views["view"].select("uuid", "time", "f").collect()))
+    assert got == expect and len(got) == 36
+
+
+def test_trail_sorts_in_one_partition(spark, sharded_db):
+    """A lookup plans no range exchange (whose bounds would cost a
+    sampling job over every file), runs in at most two jobs, and returns
+    the same time-ascending rows on the merged view."""
+    from traildb_spark.plans import audit
+
+    path, rows = sharded_db
+    uuid = f"{5:032x}"
+    q = TrailDataset.open(spark, path).trail(uuid.upper())
+    assert "rangepartitioning" not in audit.explain_str(q, "simple")
+    sc = spark.sparkContext
+    sc.setJobGroup("test-trail-jobs", "trail lookup")
+    try:
+        got = [(r["uuid"], r["time"], r["f"]) for r in q.collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("test-trail-jobs")) <= 2
+    expect = sorted((r for r in rows if r[0] == uuid), key=lambda r: r[1])
+    assert got == expect
+    # the merged view's lookup: every event twice, still time-ascending
+    merged = TrailDataset.merge([TrailDataset.open(spark, path)] * 2).trail(uuid)
+    times = [r["time"] for r in merged.collect()]
+    assert times == sorted(r[1] for r in expect * 2)
+
+
+def test_select_uuids_routes(spark, sharded_db):
+    """A short literal whitelist reaches Parquet as a pushed ``In`` filter
+    with no join, on the primary and on the z-index copy; a list above
+    MAX_PUSHED_UUIDS and a DataFrame whitelist keep the semi-join. Every
+    route returns the same rows: primary, z-index and merged view."""
+    from traildb_spark import parse_filter
+    from traildb_spark.operators.filters import MAX_PUSHED_UUIDS
+    from traildb_spark.plans import audit
+
+    path, rows = sharded_db
+    wl = [f"{u:032x}" for u in (1, 5, 7)]
+    fx = parse_filter("f=x")
+    no_index = TrailDataset.open(spark, path, use_index=False)
+    primary = no_index.select_uuids([u.upper() for u in wl]).with_filter(fx)
+    via_index = TrailDataset.open(spark, path).select_uuids(wl).with_filter(fx)
+    assert via_index._index_covers() and not primary._index_covers()
+    in_list = "In(uuid, [" + ",".join(wl) + "])"
+    for q in (primary.df, via_index.df):
+        assert in_list in audit.pushed_filters(q)
+        assert "Join" not in audit.explain_str(q, "simple")
+
+    def got(df):
+        return sorted(map(tuple, df.select("uuid", "time", "f").collect()))
+
+    expect = sorted(r for r in rows if r[0] in wl and r[2] == "x")
+    assert got(primary.df) == got(via_index.df) == expect
+    merged = TrailDataset.merge([no_index, no_index]).select_uuids(wl)
+    assert got(merged.with_filter(fx).df) == sorted(expect * 2)
+
+    long_list = wl + [f"{10**6 + i:032x}" for i in range(MAX_PUSHED_UUIDS)]
+    wl_df = spark.createDataFrame([(u,) for u in wl], "u string")
+    for w in (long_list, wl_df):
+        q = no_index.select_uuids(w).with_filter(fx).df
+        assert "LeftSemi" in audit.explain_str(q, "simple")
+        assert got(q) == expect
+
+
+def test_fsutil_listing_reads_no_bytes_and_matches_os_stat(spark, sharded_db):
+    """The data-file listing reads no file content (binaryFile would raise
+    on any file longer than maxLength=1 if it did), and the fingerprint
+    equals a digest recomputed from ``os.stat`` under the documented
+    rules, so sidecars written by earlier versions still validate."""
+    import hashlib
+
+    from pyspark.errors import PySparkException
+    from py4j.protocol import Py4JJavaError
+
+    from traildb_spark import fsutil
+
+    path, _ = sharded_db
+    key = "spark.sql.sources.binaryFile.maxLength"
+    spark.conf.set(key, "1")
+    try:
+        listed = sorted(fsutil.list_data_files(spark, path))
+        assert listed
+        # the limit is live: reading any content now fails
+        with pytest.raises((PySparkException, Py4JJavaError)):
+            spark.read.format("binaryFile").load(f"{path}/{listed[0][0]}").collect()
+    finally:
+        spark.conf.unset(key)
+
+    expect = []
+    for root, dirs, names in os.walk(path):
+        rel_dir = os.path.relpath(root, path)
+        parts = [] if rel_dir == "." else rel_dir.split(os.sep)
+        if any(d.startswith(".") or (d.startswith("_") and "=" not in d) for d in parts):
+            continue
+        for name in names:
+            if name.startswith((".", "_")) or not name.endswith(".parquet"):
+                continue
+            st = os.stat(os.path.join(root, name))
+            expect.append(("/".join(parts + [name]), st.st_size, st.st_mtime_ns // 10**6))
+    expect.sort()
+    assert listed == expect and len(expect) >= 4
+    assert all(size > 1 for _, size, _ in listed)
+    h = hashlib.md5()
+    for rel, size, mtime in expect:
+        h.update(f"{rel}:{size}:{mtime};".encode("utf-8"))
+    assert fsutil.data_fingerprint(spark, path) == h.hexdigest()

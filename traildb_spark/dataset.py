@@ -9,11 +9,15 @@ Maps the reference's data model (SURVEY §1) onto an idiomatic Spark layout:
   sorted by ``time`` within Parquet row groups;
 * *fields* are string columns; empty string ≡ NULL (`src/tdb.c:488-524`).
 
-The write layout IS our index (reference §2.8): ``finalize`` hash-clusters
-by uuid and sorts by (uuid, time) within files, so Parquet min/max stats
-prune both uuid point-lookups (reference O(log N) binary search,
-`src/tdb.c:552-589`) and time-range scans, and every per-trail window
-computation shuffles on a key the layout already clusters.
+``finalize`` hash-clusters by (shard, uuid) and sorts by (uuid, time)
+within files, so every per-trail window computation shuffles on a key the
+layout already clusters and daily shards prune time-range scans. It does
+NOT give uuid lookups the reference's O(log N) binary search
+(`src/tdb.c:552-589`): hashing spreads each file over the whole uuid
+range, so Parquet min/max stats skip no file for a pushed uuid predicate
+and a lookup scans every row group (~121 rows scanned per row returned on
+a 120-file, 4000-trail dataset). Per-file uuid ranges recorded beside the
+data are ROADMAP item 3.
 """
 
 from __future__ import annotations
@@ -46,16 +50,6 @@ _FIELDNAME_CHARS = frozenset(
     "0123456789"
 )
 _MAX_FIELDNAME_LENGTH = 512
-
-
-def _data_fingerprint(spark: SparkSession, path: str) -> str:
-    """Consistency token tying the auxiliary z-index to the data it was
-    built from (reference index↔data checksum analog,
-    `tdbcli/tdb_index.c:439-451`): a stale index must be ignored, because
-    routing substitutes its rows for the primary's. Shared implementation
-    in :func:`fsutil.data_fingerprint` (also guards the persisted IVF
-    artifact in ``operators.similarity``)."""
-    return fsutil.data_fingerprint(spark, path)
 
 
 def validate_field_names(names: list[str]) -> None:
@@ -171,7 +165,10 @@ def _shard_predicate(f: EventFilter, shard_fmt: str) -> Column | None:
                 c = (
                     F.col(SHARD_COL) >= _shard_expr(F.lit(_clamp(t.start)), shard_fmt)
                 ) & (
-                    F.col(SHARD_COL) <= _shard_expr(F.lit(_clamp(t.end)), shard_fmt)
+                    # end is exclusive: a day-aligned range must not
+                    # select the next day's shard
+                    F.col(SHARD_COL)
+                    <= _shard_expr(F.lit(_clamp(t.end - 1)), shard_fmt)
                 )
                 ors = c if ors is None else (ors | c)
             derived.append(ors)
@@ -215,10 +212,10 @@ class TrailDataset:
         there by the ``df`` property. ``use_index=False`` is the
         reference's ``--no-index`` opt-out (`tdbcli/main.c:72-74`).
 
-        Sidecar read and fingerprint walk go through the Hadoop FS API
-        (``fsutil``), so discovery works identically on file://, hdfs://
-        and s3a:// — the same posture as ``compact_shards`` and the
-        streaming sinks."""
+        Sidecar read and data-file listing go through ``fsutil`` (Hadoop
+        FS API and a Spark file listing), so discovery works identically
+        on file://, hdfs:// and s3a:// — the same posture as
+        ``compact_shards`` and the streaming sinks."""
         shard_fmt = None
         zindex = None
         raw = fsutil.read_small(spark, f"{path}/{META_FILE}")
@@ -232,7 +229,7 @@ class TrailDataset:
                 # tdb_index.c:439-451): if the primary data changed
                 # since the index was built, routing would substitute
                 # STALE rows — ignore the index instead
-                fresh = zmeta.get("data_fingerprint") == _data_fingerprint(
+                fresh = zmeta.get("data_fingerprint") == fsutil.data_fingerprint(
                     spark, path
                 )
                 if fresh and fsutil.exists(spark, zpath):
@@ -450,9 +447,20 @@ class TrailDataset:
 
     def trail(self, uuid: str) -> DataFrame:
         """One trail, time-ascending (reference ``tdb_get_trail`` +
-        cursor loop, `src/tdb_decode.c:122-217`). Parquet min/max on the
-        uuid-clustered layout prunes to O(few row groups)."""
-        return self.df.filter(F.col(UUID_COL) == uuid.lower()).orderBy(TIME_COL)
+        cursor loop, `src/tdb_decode.c:122-217`).
+
+        The uuid predicate is pushed into Parquet, but it prunes no file:
+        ``finalize`` hashes (shard, uuid), so every file spans the whole
+        uuid range and the lookup reads every row group (file-level uuid
+        skipping waits for the per-file record of ROADMAP item 3). One
+        trail is small, so it is sorted inside a single partition: a
+        global ``orderBy`` would plan a range exchange whose bounds come
+        from a separate sampling job that scans every file again."""
+        return (
+            self.df.filter(F.col(UUID_COL) == uuid.lower())
+            .repartition(1)
+            .sortWithinPartitions(TIME_COL)
+        )
 
     # -- merge (reference tdb_cons_append / tdb merge, SURVEY §2.4) --------
     @staticmethod
@@ -520,9 +528,9 @@ class TrailDataset:
         `src/tdb_encode.c:399-569`) becomes: shuffle-cluster by uuid,
         sort (uuid, time) within partitions, write Parquet (dictionary +
         RLE + compression replace the custom Huffman stages — SURVEY §4
-        non-goals). The sorted clustered layout gives Parquet row-group
-        min/max pruning the same effect as the reference's inverted index
-        and uuid binary search.
+        non-goals). Hash clustering spreads every file over the whole
+        uuid range, so this layout does not replace the reference's uuid
+        binary search (see :meth:`trail`).
 
         ``time_shard``: optional 'yyyy-MM-dd'-style partition column formula
         replicating the reference's "daily tdb" deployment pattern
@@ -719,7 +727,7 @@ class TrailDataset:
             "columns": list(cols),
             # ties the index to THIS data: open() drops the index when
             # the primary's files change (stale-index guard)
-            "data_fingerprint": _data_fingerprint(spark, db_path),
+            "data_fingerprint": fsutil.data_fingerprint(spark, db_path),
         }
         fsutil.write_small(spark, meta_path, json.dumps(meta))
         return zpath
@@ -822,7 +830,7 @@ def import_package(spark: SparkSession, package_path: str,
         with open(meta_path, "r", encoding="utf-8") as f:
             meta = json.load(f)
         if meta.get("zindex"):
-            meta["zindex"]["data_fingerprint"] = _data_fingerprint(
+            meta["zindex"]["data_fingerprint"] = fsutil.data_fingerprint(
                 spark, out_dir
             )
             with open(meta_path, "w", encoding="utf-8") as f:
@@ -1085,7 +1093,7 @@ def dataset_file_stats(spark: SparkSession, path: str) -> DataFrame:
     open cost on every scan — the streaming-finalize accumulation
     pattern this report exists to catch.
 
-    Pure metadata: one recursive Hadoop FS listing
+    Pure metadata: one Spark file listing that reads no file content
     (`fsutil.list_data_files` — the same primary-data-file rules as the
     fingerprint, so hidden/index subtrees never skew the stats),
     file-count-sized driver state, scheme-agnostic (file://, hdfs://,

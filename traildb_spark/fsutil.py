@@ -108,26 +108,38 @@ def list_data_files(spark, path: str) -> Iterator[tuple[str, int, int]]:
     _zindex, _staging, _traildb_commits, _SUCCESS, checksums) are
     skipped, but Hive partition dirs are KEPT even when they start with
     '_' — time shards are named '__shard=<v>', and excluding them would
-    make a sharded dataset look empty to the fingerprint."""
+    make a sharded dataset look empty to the fingerprint.
+
+    The entries come from ONE Spark listing, not a py4j round trip per
+    file: a ``binaryFile`` read of ``*.parquet`` that selects only path,
+    length and modification time, so no file content is read. Spark's
+    listing already drops '.'/'_' names (except Hive dirs and
+    ``_metadata``) and in-flight ``._COPYING_`` paths, which no Spark read
+    of the dataset sees either; the rules above are re-applied to its
+    output."""
+    from pyspark.sql import functions as F
+
     _, hpath, fs = hfs(spark, path)
     root = hpath(path)
     if not fs.exists(root):
         return
     prefix = fs.makeQualified(root).toString().rstrip("/") + "/"
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
+    listing = (
+        spark.read.format("binaryFile")
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.parquet")
+        .load(path)
+        .select("path", "length", F.unix_millis("modificationTime").alias("mtime"))
+        .collect()
+    )
+    for p, size, mtime in listing:
         if not p.startswith(prefix):
             continue
         rel = p[len(prefix):]
         parts = rel.split("/")
-        name = parts[-1]
-        if name.startswith((".", "_")) or not name.endswith(".parquet"):
-            continue
-        if any(
+        if parts[-1].startswith((".", "_")) or any(
             d.startswith(".") or (d.startswith("_") and "=" not in d)
             for d in parts[:-1]
         ):
             continue
-        yield rel, int(st.getLen()), int(st.getModificationTime())
+        yield rel, int(size), int(mtime)
