@@ -30,6 +30,32 @@ def load_events(spark, sf_dir, *, as_timestamp=False):
     )
 
 
+def uuid_ranges_by_shard(spark, path):
+    """{shard dir: [(min uuid, max uuid) per data file]} read from the
+    Parquet footers of the files ``open`` reads; an unsharded dataset is
+    the one shard ``""``."""
+    import pyarrow.parquet as pq
+
+    from traildb_spark.fsutil import list_data_files
+
+    out = {}
+    for rel, _, _ in list_data_files(spark, path):
+        md = pq.ParquetFile(os.path.join(path, rel)).metadata
+        col = md.schema.names.index("uuid")
+        stats = [md.row_group(i).column(col).statistics for i in range(md.num_row_groups)]
+        out.setdefault(os.path.dirname(rel), []).append(
+            (min(st.min for st in stats), max(st.max for st in stats))
+        )
+    return out
+
+
+def assert_disjoint(ranges):
+    """No two (min, max) ranges of one shard overlap."""
+    ranges = sorted(ranges)
+    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+        assert hi < lo, ranges
+
+
 def pytest_addoption(parser):
     parser.addoption(
         "--shard", default=None, metavar="i/n",

@@ -6,6 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import assert_disjoint, uuid_ranges_by_shard
 from traildb_spark import EventFilter, TrailDataset
 from traildb_spark.sources.dump import dump_csv, dump_json, project_fields
 
@@ -631,6 +632,18 @@ def test_package_roundtrip_single_file(tiny, spark, tmp_path):
 _DAY0 = 1704067200  # 2024-01-01T00:00:00Z
 
 
+def _count_jobs(spark, group: str, fn) -> int:
+    """Spark jobs that ``fn()`` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="module")
 def sharded_db(spark, tmp_path_factory):
     """12 trails x 4 days x 3 events, daily shards, z-index on ``f``."""
@@ -690,14 +703,10 @@ def test_trail_sorts_in_one_partition(spark, sharded_db):
     uuid = f"{5:032x}"
     q = TrailDataset.open(spark, path).trail(uuid.upper())
     assert "rangepartitioning" not in audit.explain_str(q, "simple")
-    sc = spark.sparkContext
-    sc.setJobGroup("test-trail-jobs", "trail lookup")
-    try:
-        got = [(r["uuid"], r["time"], r["f"]) for r in q.collect()]
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("test-trail-jobs")) <= 2
+    got = []
+    jobs = _count_jobs(spark, "test-trail-jobs", lambda: got.extend(
+        (r["uuid"], r["time"], r["f"]) for r in q.collect()))
+    assert jobs <= 2
     expect = sorted((r for r in rows if r[0] == uuid), key=lambda r: r[1])
     assert got == expect
     # the merged view's lookup: every event twice, still time-ascending
@@ -785,3 +794,73 @@ def test_fsutil_listing_reads_no_bytes_and_matches_os_stat(spark, sharded_db):
     for rel, size, mtime in expect:
         h.update(f"{rel}:{size}:{mtime};".encode("utf-8"))
     assert fsutil.data_fingerprint(spark, path) == h.hexdigest()
+
+
+# --- finalized layout: range clustering ----------------------------------
+
+
+def _range_rows():
+    """40 trails x 4 days x 2 events."""
+    return [
+        (f"{u:032x}", _DAY0 + d * 86400 + u * 60 + k, "xy"[(u + k) % 2])
+        for u in range(40)
+        for d in range(4)
+        for k in range(2)
+    ]
+
+
+@pytest.fixture(scope="module")
+def range_db(spark, tmp_path_factory):
+    """``_range_rows`` finalized with 4 buckets, in daily shards and flat."""
+    from traildb_spark import normalize_events
+
+    rows = _range_rows()
+    ev = normalize_events(spark.createDataFrame(rows, ["uuid", "time", "f"]))
+    base = tmp_path_factory.mktemp("range")
+    sharded, flat = str(base / "sharded"), str(base / "flat")
+    TrailDataset(ev).finalize(sharded, num_buckets=4, time_shard="yyyy-MM-dd")
+    TrailDataset(ev).finalize(flat, num_buckets=4)
+    return sharded, flat, rows
+
+
+def test_finalize_range_layout(spark, range_db):
+    """Each write task covers one contiguous (shard, uuid) range: at most
+    shards + n - 1 files, and within a shard the files' footer uuid ranges
+    are disjoint, so min/max stats leave a lookup one file per shard.
+    Lookups and whitelists return the source's rows on the sharded and the
+    flat layout."""
+    sharded, flat, rows = range_db
+    by_shard = uuid_ranges_by_shard(spark, sharded)
+    assert len(by_shard) == 4
+    assert sum(map(len, by_shard.values())) <= 4 + 3
+    for ranges in by_shard.values():
+        assert_disjoint(ranges)
+    flat_ranges = uuid_ranges_by_shard(spark, flat)[""]
+    assert len(flat_ranges) > 1
+    assert_disjoint(flat_ranges)
+
+    views = [TrailDataset.open(spark, p) for p in (sharded, flat)]
+    for u in (0, 17, 39):
+        uuid = f"{u:032x}"
+        expect = sorted((r for r in rows if r[0] == uuid), key=lambda r: r[1])
+        for ds in views:
+            assert [tuple(r) for r in ds.trail(uuid).select("uuid", "time", "f").collect()] == expect
+    wl = [f"{u:032x}" for u in (3, 20, 38)]
+    expect = sorted(r for r in rows if r[0] in wl)
+    for ds in views:
+        got = ds.select_uuids(wl).df.select("uuid", "time", "f").collect()
+        assert sorted(map(tuple, got)) == expect
+
+
+def test_finalize_samples_range_bounds_only_above_one_bucket(spark, tmp_path):
+    """The range bounds cost one sampling job over the input; a one-bucket
+    finalize (the streaming per-batch write) computes none."""
+    from traildb_spark import normalize_events
+
+    ev = normalize_events(spark.createDataFrame(_range_rows(), ["uuid", "time", "f"]))
+    jobs = {
+        n: _count_jobs(spark, f"test-finalize-{n}", lambda: TrailDataset(ev).finalize(
+            str(tmp_path / str(n)), num_buckets=n, time_shard="yyyy-MM-dd"))
+        for n in (1, 4)
+    }
+    assert jobs[4] == jobs[1] + 1, jobs

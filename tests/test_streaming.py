@@ -5,7 +5,7 @@ exercising the custom stateful trail operator."""
 import pyspark.sql.functions as F
 import pytest
 
-from conftest import load_events
+from conftest import assert_disjoint, load_events, uuid_ranges_by_shard
 
 from traildb_spark.streaming.sessions import (
     stateful_trail_counts,
@@ -161,9 +161,44 @@ def test_compact_shards_preserves_data(spark, sf_dir, tmp_path):
     # scheme-qualified path: compaction must run purely through the Hadoop
     # FileSystem API resolved from the path's scheme (hdfs://s3a:// story),
     # never os.rename on the bare local path
+    compact_shards(spark, f"file://{out}", num_buckets=2)
+    assert {tuple(r) for r in TrailDataset.open(spark, out).df.collect()} == before
+    ranges = uuid_ranges_by_shard(spark, out)
+    assert all(len(r) <= 2 for r in ranges.values())
+    assert any(len(r) == 2 for r in ranges.values())
+    for r in ranges.values():
+        assert_disjoint(r)
     compact_shards(spark, f"file://{out}", num_buckets=1)
     assert {tuple(r) for r in TrailDataset.open(spark, out).df.collect()} == before
     assert n_files() <= before_files and n_files() == 1
+
+
+def test_streaming_batch_keeps_index_entry(spark, tmp_path):
+    """A batch landed after ``build_index`` keeps the sidecar's z-index
+    entry: ``open`` warns that the index is stale and ignores it, and a
+    covered dump returns the primary's rows, the new batch's included."""
+    from traildb_spark import normalize_events, parse_filter
+    from traildb_spark.dataset import TrailDataset
+    from traildb_spark.streaming.ingest import _finalize_batch
+
+    day0 = 1704067200
+    rows = [(f"{u:032x}", day0 + d * 86400 + u, "xy"[u % 2]) for u in range(8) for d in range(2)]
+    path = str(tmp_path / "tdb")
+    for batch_id, part in enumerate((rows[:8], rows[8:])):
+        ev = normalize_events(spark.createDataFrame(part, ["uuid", "time", "f"]))
+        _finalize_batch(ev, batch_id, path, time_shard="yyyy-MM-dd")
+        if batch_id == 0:
+            TrailDataset.build_index(spark, path, ["f"])
+            assert TrailDataset.open(spark, path)._zindex is not None
+    with pytest.warns(UserWarning, match="stale"):
+        ds = TrailDataset.open(spark, path)
+    assert ds._zindex is None
+
+    def dump(d):
+        return sorted(map(tuple, d.with_filter(parse_filter("f=x")).df.select("uuid", "time", "f").collect()))
+
+    primary = TrailDataset.open(spark, path, use_index=False)
+    assert dump(ds) == dump(primary) == sorted(r for r in rows if r[2] == "x")
 
 
 def test_streaming_funnel_matches_batch(spark, sf_dir, tmp_path):

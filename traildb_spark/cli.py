@@ -449,7 +449,7 @@ def cmd_forget(args) -> int:
 
 def cmd_compact(args) -> int:
     """``tdb compact``: rewrite closed time shards of a (streaming-
-    appended) sharded dataset as one uuid-clustered file set each —
+    appended) sharded dataset as one range-clustered file set each —
     the remedy `tdb stats` advises for small-file shards. Only compact
     shards no longer receiving appends (see compact_shards' docstring
     for the swap/crash-recovery contract)."""
@@ -465,6 +465,13 @@ def cmd_compact(args) -> int:
         return 0
     print(f"compacted {len(done)} shard(s): " + ",".join(done[:20]))
     return 0
+
+
+_BUCKETS_HELP = (
+    "output files, each one contiguous uuid range, disjoint from the "
+    "others so a uuid lookup reads one (default: "
+    "spark.sql.shuffle.partitions)"
+)
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -495,7 +502,7 @@ def build_parser() -> argparse.ArgumentParser:
     mk.add_argument("-f", "--fields", help="field spec, e.g. uuid,time,action or 2:uuid,5:time")
     mk.add_argument("--csv-header", action="store_true")
     mk.add_argument("--skip-bad-input", action="store_true")
-    mk.add_argument("--buckets", type=int, default=None)
+    mk.add_argument("--buckets", type=int, default=None, help=_BUCKETS_HELP)
     mk.add_argument("inputs", help="input path/glob")
     mk.set_defaults(fn=cmd_make)
 
@@ -536,7 +543,7 @@ def build_parser() -> argparse.ArgumentParser:
 
     mg = sub.add_parser("merge", help="merge datasets (schema union)")
     mg.add_argument("-o", "--output", required=True)
-    mg.add_argument("--buckets", type=int, default=None)
+    mg.add_argument("--buckets", type=int, default=None, help=_BUCKETS_HELP)
     mg.add_argument("--filter", help="CNF filter applied to every input")
     mg.add_argument("--uuids", help="uuid whitelist file applied to every input")
     mg.add_argument("inputs", nargs="+")
@@ -603,7 +610,9 @@ def build_parser() -> argparse.ArgumentParser:
     cp.add_argument(
         "--shards", help="comma-separated shard values (default: all)"
     )
-    cp.add_argument("--buckets", type=int, default=None)
+    cp.add_argument("--buckets", type=int, default=None,
+                    help="files per compacted shard, each one contiguous "
+                         "uuid range (default: spark.sql.shuffle.partitions)")
     cp.set_defaults(fn=cmd_compact)
     return p
 

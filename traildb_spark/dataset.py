@@ -9,15 +9,17 @@ Maps the reference's data model (SURVEY §1) onto an idiomatic Spark layout:
   sorted by ``time`` within Parquet row groups;
 * *fields* are string columns; empty string ≡ NULL (`src/tdb.c:488-524`).
 
-``finalize`` hash-clusters by (shard, uuid) and sorts by (uuid, time)
+``finalize`` range-clusters by (shard, uuid) and sorts by (uuid, time)
 within files, so every per-trail window computation shuffles on a key the
-layout already clusters and daily shards prune time-range scans. It does
-NOT give uuid lookups the reference's O(log N) binary search
-(`src/tdb.c:552-589`): hashing spreads each file over the whole uuid
-range, so Parquet min/max stats skip no file for a pushed uuid predicate
-and a lookup scans every row group (~121 rows scanned per row returned on
-a 120-file, 4000-trail dataset). Per-file uuid ranges recorded beside the
-data are ROADMAP item 3.
+layout already clusters and daily shards prune time-range scans. Each
+write task covers one contiguous (shard, uuid) range: a sharded dataset
+has about shards + n - 1 files, and within a shard the files hold
+disjoint uuid ranges. For a pushed uuid predicate the footer min/max
+stats then drop every file but one per shard before any dictionary page
+is read — the file-level analog of the reference's binary search over
+sorted uuids (`src/tdb.c:552-589`); the rows of that one file are still
+scanned. Each footer is still opened: per-file uuid ranges recorded
+beside the data, for plan-time skipping, are ROADMAP item 3.
 """
 
 from __future__ import annotations
@@ -113,6 +115,26 @@ def normalize_events(
     ]
     out += [F.coalesce(F.col(c).cast("string"), F.lit("")).alias(c) for c in cols]
     return df.select(*out)
+
+
+def _range_cluster(df: DataFrame, n: int, keys: list[str]) -> DataFrame:
+    """The finalized layout: ``n`` tasks, each one contiguous range of
+    ``keys`` sorted by (``keys``, time). Equal keys share a task, so the
+    files written hold disjoint key ranges. For ``n`` = 1 Spark computes
+    no range bounds, so no sampling job runs."""
+    return df.repartitionByRange(n, *keys).sortWithinPartitions(*keys, TIME_COL)
+
+
+def update_meta(spark: SparkSession, path: str, **entries) -> None:
+    """Set ``entries`` in the dataset's ``_traildb_meta.json`` sidecar and
+    keep every other key, so an append does not drop the z-index entry
+    that ``build_index`` recorded (``open`` then sees the index as stale
+    and warns, instead of losing it without a word)."""
+    meta_path = f"{path}/{META_FILE}"
+    raw = fsutil.read_small(spark, meta_path)
+    meta = json.loads(raw) if raw is not None else {}
+    meta.update(entries)
+    fsutil.write_small(spark, meta_path, json.dumps(meta))
 
 
 @dataclass
@@ -449,13 +471,14 @@ class TrailDataset:
         """One trail, time-ascending (reference ``tdb_get_trail`` +
         cursor loop, `src/tdb_decode.c:122-217`).
 
-        The uuid predicate is pushed into Parquet, but it prunes no file:
-        ``finalize`` hashes (shard, uuid), so every file spans the whole
-        uuid range and the lookup reads every row group (file-level uuid
-        skipping waits for the per-file record of ROADMAP item 3). One
-        trail is small, so it is sorted inside a single partition: a
-        global ``orderBy`` would plan a range exchange whose bounds come
-        from a separate sampling job that scans every file again."""
+        The uuid predicate is pushed into Parquet. ``finalize`` gives the
+        files of a shard disjoint uuid ranges, so footer min/max stats drop
+        all but one file per shard and the lookup scans that file's rows
+        only (every footer is still read; plan-time skipping waits for the
+        per-file record of ROADMAP item 3). One trail is small, so it is
+        sorted inside a single partition: a global ``orderBy`` would plan a
+        range exchange whose bounds come from a separate sampling job that
+        scans every file again."""
         return (
             self.df.filter(F.col(UUID_COL) == uuid.lower())
             .repartition(1)
@@ -525,12 +548,16 @@ class TrailDataset:
         """Write the immutable, query-optimized snapshot.
 
         Reference pipeline (group by uuid → time-sort → compress,
-        `src/tdb_encode.c:399-569`) becomes: shuffle-cluster by uuid,
-        sort (uuid, time) within partitions, write Parquet (dictionary +
-        RLE + compression replace the custom Huffman stages — SURVEY §4
-        non-goals). Hash clustering spreads every file over the whole
-        uuid range, so this layout does not replace the reference's uuid
-        binary search (see :meth:`trail`).
+        `src/tdb_encode.c:399-569`) becomes: range-cluster by (shard,
+        uuid) into ``num_buckets`` tasks (default
+        ``spark.sql.shuffle.partitions``), sort (uuid, time) within each,
+        write Parquet (dictionary + RLE + compression replace the custom
+        Huffman stages — SURVEY §4 non-goals). Each task writes one
+        contiguous (shard, uuid) range, so a sharded write leaves about
+        shards + ``num_buckets`` - 1 files and the files of one shard
+        hold disjoint uuid ranges, which is what lets a uuid lookup skip
+        files (see :meth:`trail`). The range bounds cost one sampling job
+        over the input when ``num_buckets`` > 1.
 
         ``time_shard``: optional 'yyyy-MM-dd'-style partition column formula
         replicating the reference's "daily tdb" deployment pattern
@@ -541,31 +568,17 @@ class TrailDataset:
         (year-first, e.g. 'yyyy-MM-dd' or 'yyyy-MM-dd-HH').
         """
         df = self.df
-        writer_df = df
         n = num_buckets or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        keys = [UUID_COL]
         if time_shard:
-            writer_df = df.withColumn(
-                SHARD_COL, _shard_expr(F.col(TIME_COL), time_shard)
-            )
-            (
-                writer_df.repartition(n, F.col(SHARD_COL), F.col(UUID_COL))
-                .sortWithinPartitions(SHARD_COL, UUID_COL, TIME_COL)
-                .write.mode(mode)
-                .partitionBy(SHARD_COL)
-                .parquet(path)
-            )
-            fsutil.write_small(
-                df.sparkSession,
-                f"{path}/{META_FILE}",
-                json.dumps({"time_shard": time_shard, "timezone": "UTC"}),
-            )
+            df = df.withColumn(SHARD_COL, _shard_expr(F.col(TIME_COL), time_shard))
+            keys = [SHARD_COL, UUID_COL]
+        writer = _range_cluster(df, n, keys).write.mode(mode)
+        if time_shard:
+            writer.partitionBy(SHARD_COL).parquet(path)
+            update_meta(df.sparkSession, path, time_shard=time_shard, timezone="UTC")
         else:
-            (
-                writer_df.repartition(n, F.col(UUID_COL))
-                .sortWithinPartitions(UUID_COL, TIME_COL)
-                .write.mode(mode)
-                .parquet(path)
-            )
+            writer.parquet(path)
 
     def save_bucketed_table(
         self, name: str, num_buckets: int = 32, mode: str = "errorifexists"
@@ -719,17 +732,17 @@ class TrailDataset:
             mode="overwrite",
             parquet_block_bytes=parquet_block_bytes,
         )
-        meta_path = f"{db_path}/{META_FILE}"
-        raw = fsutil.read_small(spark, meta_path)
-        meta = json.loads(raw) if raw is not None else {}
-        meta["zindex"] = {
-            "path": ZINDEX_DIR,
-            "columns": list(cols),
-            # ties the index to THIS data: open() drops the index when
-            # the primary's files change (stale-index guard)
-            "data_fingerprint": fsutil.data_fingerprint(spark, db_path),
-        }
-        fsutil.write_small(spark, meta_path, json.dumps(meta))
+        update_meta(
+            spark,
+            db_path,
+            zindex={
+                "path": ZINDEX_DIR,
+                "columns": list(cols),
+                # ties the index to THIS data: open() drops the index when
+                # the primary's files change (stale-index guard)
+                "data_fingerprint": fsutil.data_fingerprint(spark, db_path),
+            },
+        )
         return zpath
 
 
@@ -852,10 +865,11 @@ def compact_shards(
     ``streaming.ingest.streaming_finalize`` clusters per micro-batch, so a
     shard that received many batches holds many small uuid-runs; queries
     stay correct but lose row-group pruning sharpness and pay small-file
-    overhead. Compaction rewrites a whole shard as one uuid-clustered,
-    (uuid, time)-sorted file set — the reference's immutable daily
-    re-encode (doc/docs/index.md:43-45), applied per shard instead of per
-    database so 100 TB of history is never rewritten to absorb one day.
+    overhead. Compaction rewrites a whole shard in ``finalize``'s layout,
+    ``num_buckets`` (uuid, time)-sorted files with disjoint uuid ranges —
+    the reference's immutable daily re-encode (doc/docs/index.md:43-45),
+    applied per shard instead of per database so 100 TB of history is
+    never rewritten to absorb one day.
 
     Only compact shards no longer receiving appends (older than the
     stream's watermark): the swap is not concurrency-safe against an
@@ -904,13 +918,8 @@ def compact_shards(
             fs.delete(tmp_dir, True)
         if fs.exists(old_dir):
             fs.delete(old_dir, True)
-        (
-            spark.read.parquet(shard_dir.toString())
-            .repartition(n, F.col(UUID_COL))
-            .sortWithinPartitions(UUID_COL, TIME_COL)
-            .write.mode("overwrite")
-            .parquet(tmp_dir.toString())
-        )
+        clustered = _range_cluster(spark.read.parquet(shard_dir.toString()), n, [UUID_COL])
+        clustered.write.mode("overwrite").parquet(tmp_dir.toString())
         _rename(shard_dir, old_dir)
         _rename(tmp_dir, shard_dir)
         fs.delete(old_dir, True)

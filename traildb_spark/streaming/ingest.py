@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..dataset import TrailDataset
+from ..dataset import TrailDataset, update_meta
 from ..fsutil import hfs as _hfs
 from ..fsutil import read_small as _fs_read_small
 from ..fsutil import swap_pointer as _fs_swap_pointer
@@ -151,8 +151,9 @@ def _finalize_batch(
        shard directories under DETERMINISTIC names
        (``batch-<id>-<seq>.parquet``) — re-moving after a partial move
        overwrites, never duplicates.
-    4. Write the sidecar (constant content — idempotent), then create the
-       commit marker and drop staging.
+    4. Set the sidecar's shard format, keeping its other keys (a z-index
+       entry then reads as stale on ``open`` instead of vanishing;
+       idempotent), then create the commit marker and drop staging.
 
     Returns True if the batch was written, False if skipped as committed.
     Directories starting with ``_`` are invisible to parquet readers, so
@@ -233,15 +234,7 @@ def _finalize_batch(
                     "aborting commit so the retry can re-stage"
                 )
     if time_shard:
-        import json as _json
-
-        out = fs.create(hpath(f"{path}/_traildb_meta.json"), True)
-        out.write(
-            bytearray(
-                _json.dumps({"time_shard": time_shard, "timezone": "UTC"}), "utf-8"
-            )
-        )
-        out.close()
+        update_meta(spark, path, time_shard=time_shard, timezone="UTC")
     fs.mkdirs(marker.getParent())
     fs.createNewFile(marker)
     fs.delete(hpath(staging), True)
