@@ -1712,3 +1712,67 @@ def test_streaming_dedup_against_refuses_swapped_corpus(spark, tmp_path):
         [(200, "corpus doc b")], "doc_id long, text string")
     with pytest.raises(RuntimeError, match="does not match"):
         streaming_dedup_against(stream, corpus_b, out, ckpt)
+
+
+# (dir kind, step, step args between (df, id, path) and run_token,
+#  reader, reader kwargs) for every sink that commits through _merge_step
+_SKETCH_SINKS = [
+    ("sketch", "_countmin_batch", ("v", 64, 2, "cm:"), "countmin_current", {}),
+    ("sample", "_sample_batch", (2, "doc_id", ""), "sample_current", {}),
+    ("mg", "_heavy_hitters_batch", ("v", 2), "heavy_hitters_current", {}),
+    ("hist", "_histogram_batch", ("event_type", "value", 1.0),
+     "histogram_current", {}),
+    ("hll", "_hll_batch", ("v", 4), "hll_current", {"p": 4}),
+    ("ohlc", "_ohlc_batch", ("event_type", "value", "time", "event_id", 60),
+     "ohlc_current", {}),
+    ("kmv", "_kmv_batch", ("v", 2), "kmv_current", {"k": 2}),
+]
+
+
+@pytest.mark.parametrize(
+    "kind,step,args,reader,kw", _SKETCH_SINKS, ids=[s[1] for s in _SKETCH_SINKS]
+)
+def test_sketch_sink_commit_protocol(spark, tmp_path, kind, step, args, reader,
+                                     kw):
+    """Every sketch sink keeps the same exactly-once contract: a replay of
+    the committed id is a no-op, a commit deletes the superseded state
+    dir and the reader follows the pointer, and batch id 0 over existing
+    state (a cleared checkpoint reused) raises and leaves the pointer
+    where it was."""
+    import hashlib
+    import os
+
+    from traildb_spark.streaming import ingest
+
+    df = spark.createDataFrame(
+        [("a", "d1", "click", 1.5, 10, 1), ("b", "d2", "view", 2.5, 70, 2),
+         ("a", "d3", "click", 0.5, 130, 3)],
+        "v string, doc_id string, event_type string, value double, "
+        "time long, event_id long",
+    )
+    out, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    token = hashlib.md5(ckpt.encode("utf-8")).hexdigest()[:8]
+
+    def run(batch_id):
+        return getattr(ingest, step)(df, batch_id, out, *args, token)
+
+    def pointer():
+        with open(f"{out}/_latest_{token}") as fh:
+            return fh.read().strip()
+
+    assert run(0) is True
+    assert run(0) is False
+    assert run(1) is True
+    committed = f"{out}/{kind}_{token}_1"
+    assert pointer() == committed
+    assert [d for d in os.listdir(out) if d.startswith(f"{kind}_")] == [
+        f"{kind}_{token}_1"
+    ]
+    live = getattr(ingest, reader)(spark, out, ckpt, **kw)
+    files = live.inputFiles()
+    assert files and all(f"/{kind}_{token}_1/" in f for f in files)
+    assert live.count() > 0
+    with pytest.raises(RuntimeError, match="previous lineage") as err:
+        run(0)
+    assert "cleared checkpoint" in str(err.value)
+    assert pointer() == committed

@@ -96,17 +96,6 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # shingles / n-grams (shared)
 # --------------------------------------------------------------------------
 
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles of the normalized text, as an array.
-    Pure Catalyst (transform over a sequence of offsets) — JVM-side, no UDF.
-    """
-    t = normalize_text(col)
-    n = F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n), lambda i: t.substr(i, F.lit(k)))
-    )
-
-
 def word_ngrams(col: Column, n: int = 3) -> Column:
     """Distinct word n-grams (space-joined) of the normalized text."""
     words = F.split(normalize_text(col), " ")
@@ -123,48 +112,6 @@ def jaccard(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = F.size(F.array_union(a, b)).cast("double")
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
-def _rotl(c: Column, r: int) -> Column:
-    return F.shiftleft(c, r).bitwiseOR(F.shiftrightunsigned(c, 64 - r))
-
-
-def word_ngram_hashes(col: Column, n: int = 3) -> Column:
-    """Sorted distinct 64-bit hashes of word n-grams — the shuffle-friendly
-    representation: one xxhash64 per WORD, n-gram hash = XOR of rotated
-    word hashes (position-sensitive, no string building, no overflow under
-    ANSI mode). Set-equivalent to the string n-grams up to 2^-64 collisions,
-    so Jaccard values match the string formulation exactly in practice.
-    """
-    words = F.filter(F.split(normalize_text(col), " "), lambda t: t != "")
-    wh = F.transform(words, lambda w: F.xxhash64(w))
-    cnt = F.greatest(F.size(wh) - F.lit(n - 1), F.lit(1))
-
-    def gram(i):
-        g = None
-        for j in range(n):
-            term = _rotl(F.element_at(wh, i + F.lit(j + 1)), 7 * j + 1) if j else F.element_at(wh, i + F.lit(1))
-            g = term if g is None else g.bitwiseXOR(term)
-        return g
-
-    gh = F.transform(F.sequence(F.lit(0), cnt - F.lit(1)), gram)
-    # docs shorter than n words get ONE gram (the whole text), mirroring
-    # the string formulation's clamped slice
-    short = F.array(F.xxhash64(F.array_join(words, " ")))
-    return F.array_sort(
-        F.array_distinct(F.when(F.size(wh) >= n, gh).otherwise(short))
-    )
-
-
-def char_shingle_hashes(col: Column, k: int = 5) -> Column:
-    """Sorted distinct 64-bit hashes of character k-shingles."""
-    t = normalize_text(col)
-    n = F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
-    return F.array_sort(
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(1), n), lambda i: F.xxhash64(t.substr(i, F.lit(k))))
-        )
-    )
 
 
 def _jaccard_hashes_udf(a: Column, b: Column) -> Column:
@@ -355,21 +302,6 @@ def ngram_jaccard_pairs(
 # --------------------------------------------------------------------------
 # MinHash + LSH
 # --------------------------------------------------------------------------
-
-def minhash_signature(grams: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature via the affine-permutation family over ONE
-    xxhash64 per shingle (JVM-side), with the num_hashes permutations
-    evaluated as a single numpy broadcast per Arrow batch.
-
-    (A pure-Catalyst transform(sequence)×array_min formulation works but
-    higher-order functions evaluate interpreted per element — measured
-    ~60× slower at 64 hashes × hundreds of shingles per doc.)
-    """
-    from ..functions.vectorized import minhash_signatures
-
-    base_hashes = F.transform(grams, lambda s: F.xxhash64(s))
-    return minhash_signatures(base_hashes, num_hashes)
-
 
 def minhash_lsh_pairs(
     df: DataFrame,
@@ -1185,19 +1117,6 @@ def fuzzy_dedup_against_prebuilt(
 # --------------------------------------------------------------------------
 # SimHash
 # --------------------------------------------------------------------------
-
-def simhash64(tokens: Column) -> Column:
-    """64-bit SimHash over a token array: per-bit weighted vote of
-    xxhash64(token). Pure Catalyst: aggregate() over the token array inside
-    transform() over 64 bit positions, then recombine. No UDF.
-    """
-    from ..functions.vectorized import simhash_from_hashes
-
-    # one xxhash64 per token JVM-side; the 64-bit vote tally is numpy
-    # bit-unpacking per Arrow batch (an all-Catalyst fold works but
-    # evaluates interpreted — measured ~20x slower)
-    return simhash_from_hashes(F.transform(tokens, lambda t: F.xxhash64(t)))
-
 
 def simhash_pairs(
     df: DataFrame,

@@ -43,12 +43,6 @@ def bpe_token_count(col: Column) -> Column:
     return F.regexp_count(col, F.lit(TOKEN_REGEX))
 
 
-def stopword_ratio(col: Column, stopwords: list[str]) -> Column:
-    toks = tokens(col)
-    hits = F.size(F.filter(toks, lambda t: t.isin(stopwords)))
-    return F.when(F.size(toks) > 0, hits.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def quality_score(col: Column) -> Column:
     """Composite quality heuristic in [0,1]: mean word length sanity,
     punctuation ratio, and alpha ratio — the C4/Gopher-style cheap filters.

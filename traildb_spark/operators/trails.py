@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 UUID_COL = "uuid"

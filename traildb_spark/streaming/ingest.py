@@ -1,26 +1,40 @@
-"""Streaming ingest: continuous finalize + exact streaming dedup.
+"""Streaming ingest: continuous finalize, exact streaming dedup and
+mergeable-sketch sinks.
 
 The reference's deployment model is a cron loop — "producers encode new
 TrailDBs at regular intervals, e.g. daily" (doc/docs/index.md:43-45).
-These operators replace that loop with Structured Streaming while landing
-data in the SAME finalized layout batch queries already prune:
+These operators replace that loop with Structured Streaming:
 
-* ``streaming_dedup_exact`` — drop exact duplicate documents as they
-  arrive, with state bounded by the watermark (the only dedup formulation
-  that survives an unbounded stream).
-* ``streaming_finalize`` — sink a stream into the ``TrailDataset``
-  finalize layout (uuid-clustered, time-sorted, optional time shards), one
-  micro-batch at a time. ``foreachBatch`` alone is only AT-LEAST-ONCE (a
-  retry after a partial append would duplicate events), so the batch
-  writer adds an idempotent commit protocol: stage → deterministic-rename
-  move → commit marker (details on ``_finalize_batch``).
+* ``streaming_dedup_exact`` drops exact duplicate documents as they
+  arrive, with state bounded by the watermark.
+* ``streaming_finalize`` lands a stream in the ``TrailDataset`` finalize
+  layout, one micro-batch at a time.
+* ``streaming_countmin`` / ``_uniform_sample`` / ``_heavy_hitters`` /
+  ``_histogram`` / ``_hll`` / ``_ohlc`` / ``_kmv`` keep a sketch-sized
+  state that each micro-batch merges into; ``<sketch>_current`` reads it.
+* ``streaming_dedup_against`` accepts only rows new to a static corpus
+  and to every earlier batch.
+
+``foreachBatch`` alone is at-least-once: the engine replays a batch id
+after a crash between the write and the checkpoint commit. Each sink
+therefore makes its write idempotent per batch id, through one of three
+commit protocols, all scoped to the checkpoint by ``_run_token``:
+
+1. finalize: staged files moved under deterministic names, then a
+   per-batch commit marker (``_finalize_batch``);
+2. sketch sinks: a deterministic per-batch state dir, then an atomic
+   swap of the ``_latest_<token>`` pointer (``_merge_step``);
+3. dedup_against: append-only per-batch dirs, a content signature per
+   batch, then the pointer swap (``_dedup_against_batch``).
 """
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..dataset import TrailDataset, update_meta
@@ -28,7 +42,100 @@ from ..fsutil import hfs as _hfs
 from ..fsutil import read_small as _fs_read_small
 from ..fsutil import swap_pointer as _fs_swap_pointer
 from ..fsutil import write_small as _fs_write_small
+from ..functions.core import md5_60
+from ..operators.analytics import (
+    MG_SUMMARY_SCHEMA,
+    countmin_build,
+    mg_bounds,
+    mg_partition_summarize,
+    ohlc_from_partials,
+    ohlc_partials,
+    value_histogram,
+)
+from ..operators.dedup import build_bloom_filter
 from ..operators.text import fingerprint
+
+
+def _run_token(checkpoint: str) -> str:
+    """The checkpoint's scope for markers, pointers and state dirs. A
+    restart against the same output path with a FRESH checkpoint restarts
+    batch ids at 0; artifacts keyed by bare batch id would take the new
+    batches for committed ones."""
+    return hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
+
+
+def _start(stream: DataFrame, checkpoint: str, processing_time: str | None,
+           step, output_mode: str = "update"):
+    """Start ``stream`` as a checkpointed ``foreachBatch(step)`` query.
+    The default trigger drains what is there and stops (the reference's
+    cron-loop cadence); pass ``processing_time`` (e.g. "1 minute") for a
+    long-running query. Returns the ``StreamingQuery``."""
+    writer = (
+        stream.writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(output_mode)
+    )
+    if processing_time is not None:
+        return writer.trigger(processingTime=processing_time).start()
+    return writer.trigger(availableNow=True).start()
+
+
+def _current(spark, path: str, checkpoint: str) -> str:
+    """The target of the committed ``_latest_<token>`` pointer under
+    ``path``; ``FileNotFoundError`` naming the pointer if none is."""
+    latest = f"{path}/_latest_{_run_token(checkpoint)}"
+    cur = _fs_read_small(spark, latest)
+    if cur is None:
+        raise FileNotFoundError(latest)
+    return cur.strip()
+
+
+def _merge_step(batch_df: DataFrame, batch_id: int, path: str,
+                run_token: str, kind: str, op: str, merge) -> bool:
+    """The exactly-once commit of every sketch sink. ``merge(prev)``
+    returns the new state from the committed state ``prev`` (``None``
+    before the first commit) and ``batch_df``; it must be a pure function
+    of the two. A naive read-merge-swap would double-count when the
+    engine replays a batch after the swap, so:
+
+    1. The state dir is DETERMINISTIC: ``<path>/<kind>_<token>_<id>``.
+       A replay before the pointer advanced rebuilds the identical dir
+       from the identical input (written with overwrite).
+    2. If the ``_latest_<token>`` pointer already names that dir, the
+       batch is a replay after its commit: return False, state untouched.
+    3. Batch id 0 over existing state is a CLEARED checkpoint reused
+       against a kept state path (an intact checkpoint replays id 0 only
+       while the pointer still names id 0's own dir, caught by 2).
+       Merging the re-read source would double-count and resetting would
+       destroy the state with no visible signal, so it raises.
+    4. ``merge(prev)`` is written as one file, then the pointer is swapped
+       atomically (``fsutil.swap_pointer``): the swap IS the commit.
+    5. The superseded dir is deleted; replays of this batch now no-op.
+
+    Every pointer and dir operation goes through the Hadoop FileSystem
+    API, so the state works unchanged on file://, hdfs:// and s3a://.
+    Returns True if the batch was committed, False on a replay."""
+    spark = batch_df.sparkSession
+    latest = f"{path}/_latest_{run_token}"
+    out_b = f"{path}/{kind}_{run_token}_{batch_id}"
+    prev = (_fs_read_small(spark, latest) or "").strip() or None
+    if prev == out_b:
+        return False
+    if prev is not None and batch_id == 0:
+        raise RuntimeError(
+            f"{op}: batch id 0 arrived but {path} already holds state from "
+            "a previous lineage of the same checkpoint path (cleared "
+            "checkpoint reused). Merging would double-count and resetting "
+            "would destroy the accumulated state — use a fresh checkpoint "
+            f"path or delete the state at {path} explicitly."
+        )
+    new = merge(None if prev is None else spark.read.parquet(prev))
+    new.coalesce(1).write.mode("overwrite").parquet(out_b)
+    _fs_swap_pointer(spark, latest, out_b)
+    if prev is not None:
+        _, hpath, fs = _hfs(spark, prev)
+        fs.delete(hpath(prev), True)
+    return True
 
 
 def streaming_dedup_exact(
@@ -89,38 +196,10 @@ def streaming_finalize(
 
     Returns the started ``StreamingQuery``.
     """
-
-    # commit markers are scoped to THIS checkpoint lineage: a restart
-    # against the same output path with a FRESH checkpoint restarts batch
-    # ids at 0, and markers keyed by bare batch_id would silently discard
-    # the new batches as "already committed"
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _finalize_batch(
-            batch_df,
-            batch_id,
-            path,
-            time_shard=time_shard,
-            num_buckets=num_buckets,
-            run_token=run_token,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    # default: drain-what's-there and stop (the reference's cron-loop
-    # cadence, and what the parity tests drive). Pass processing_time
-    # (e.g. "1 minute") for a genuinely continuous long-running query.
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    run_token = _run_token(checkpoint)
+    return _start(stream, checkpoint, processing_time, lambda df, i: (
+        _finalize_batch(df, i, path, time_shard, num_buckets, run_token)),
+        output_mode="append")
 
 
 def _finalize_batch(
@@ -160,9 +239,7 @@ def _finalize_batch(
     staging and markers never pollute query results.
     """
     spark = batch_df.sparkSession
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    _, hpath, fs = _hfs(spark, path)
     marker = hpath(f"{path}/_traildb_commits/batch-{run_token}-{batch_id}")
     if fs.exists(marker):
         # Replay of a committed id — UNLESS this is batch 0 of a CLEARED
@@ -257,36 +334,12 @@ def streaming_countmin(
     running sketch by union + re-sum, so the state written to ``path``
     stays sketch-sized forever while the stream is unbounded. The classic
     "approximate top values over an infinite firehose" primitive.
-
-    Exactly-once via a pointer protocol (a naive read-merge-swap
-    double-counts if the engine replays a batch after the swap): each
-    batch writes its merged sketch to a DETERMINISTIC per-batch dir built
-    from the sketch the ``_latest`` pointer references, then atomically
-    advances the pointer. A replay before the pointer advanced rebuilds
-    the identical dir from the identical input; a replay after it sees
-    the pointer already at its own output and returns without touching
-    state. Probe the pointer target any time with
-    ``analytics.countmin_probe``.
+    Exactly-once through ``_merge_step``. Read the sketch with
+    :func:`countmin_current` and probe it with ``analytics.countmin_probe``.
     """
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _countmin_batch(
-            batch_df, batch_id, path, col, width, depth, seed, run_token
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    run_token = _run_token(checkpoint)
+    return _start(stream, checkpoint, processing_time, lambda df, i: (
+        _countmin_batch(df, i, path, col, width, depth, seed, run_token)))
 
 
 def _countmin_batch(
@@ -299,65 +352,21 @@ def _countmin_batch(
     seed: str,
     run_token: str,
 ) -> bool:
-    """One count-min merge step (exposed for the crash-replay tests, like
-    ``_finalize_batch``). Returns False when the batch was a replay of an
-    already-committed id (state untouched).
+    """One count-min merge step (commit protocol: ``_merge_step``)."""
+    def merge(prev):
+        part = countmin_build(batch_df, col, width, depth, seed)
+        if prev is None:
+            return part
+        return (prev.unionByName(part).groupBy("d", "cell")
+                .agg(F.sum("c").alias("c")))
 
-    Pointer/marker ops go through the Hadoop FileSystem API
-    (``_fs_read_small`` / ``_fs_swap_pointer``), so the sketch state works
-    unchanged on file://, hdfs:// and s3a:// — the same deployment posture
-    as ``_finalize_batch``."""
-    from ..operators.analytics import countmin_build
-
-    spark = batch_df.sparkSession
-    latest = f"{path}/_latest_{run_token}"
-    out_b = f"{path}/sketch_{run_token}_{batch_id}"
-    prev = (_fs_read_small(spark, latest) or "").strip() or None
-    if prev == out_b:
-        return False  # replay after commit: pointer already advanced
-    if prev is not None and batch_id == 0:
-        # batch id 0 with existing state = a CLEARED checkpoint against a
-        # kept output path (an intact checkpoint can only replay id 0
-        # while the pointer still references id 0's own output — caught
-        # above). Merging the re-read source into the old totals would
-        # double-count everything, and silently discarding the
-        # accumulated sketch would destroy state with no operator-visible
-        # signal — refuse loudly, same contract as ``_finalize_batch``.
-        raise RuntimeError(
-            "streaming_countmin: batch id 0 arrived but this sketch path "
-            "already holds state from a previous lineage of the same "
-            "checkpoint path (checkpoint was cleared and reused). Merging "
-            "would double-count and resetting would destroy the "
-            "accumulated sketch — use a fresh checkpoint path or delete "
-            f"the sketch state at {path} explicitly."
-        )
-    part = countmin_build(batch_df, col, width, depth, seed)
-    if prev is not None:
-        merged = (
-            spark.read.parquet(prev)
-            .unionByName(part)
-            .groupBy("d", "cell")
-            .agg(F.sum("c").alias("c"))
-        )
-    else:
-        merged = part
-    merged.coalesce(1).write.mode("overwrite").parquet(out_b)
-    _fs_swap_pointer(spark, latest, out_b)  # pointer advance = the commit
-    if prev is not None:
-        _, hpath, fs = _hfs(spark, prev)
-        fs.delete(hpath(prev), True)  # safe: replays of this batch now no-op
-    return True
+    return _merge_step(batch_df, batch_id, path, run_token, "sketch",
+                       "streaming_countmin", merge)
 
 
 def countmin_current(spark, path: str, checkpoint: str) -> DataFrame:
     """The live sketch the ``streaming_countmin`` pointer references."""
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-    cur = _fs_read_small(spark, f"{path}/_latest_{run_token}")
-    if cur is None:
-        raise FileNotFoundError(f"{path}/_latest_{run_token}")
-    return spark.read.parquet(cur.strip())
+    return spark.read.parquet(_current(spark, path, checkpoint))
 
 
 def streaming_uniform_sample(
@@ -379,27 +388,11 @@ def streaming_uniform_sample(
     back to k. State is k rows forever; and because the rank ignores
     arrival order, the maintained sample is IDENTICAL to the batch
     operator over the same data — not merely same-distribution
-    (parity-tested). Exactly-once via the same atomic-pointer protocol
-    as ``streaming_countmin`` (deterministic per-batch dirs + pointer
-    swap; replays rebuild the identical dir or no-op).
+    (parity-tested). Exactly-once through ``_merge_step``.
     """
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _sample_batch(batch_df, batch_id, path, k, id_col, seed, run_token)
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    run_token = _run_token(checkpoint)
+    return _start(stream, checkpoint, processing_time, lambda df, i: (
+        _sample_batch(df, i, path, k, id_col, seed, run_token)))
 
 
 def _sample_batch(
@@ -411,41 +404,26 @@ def _sample_batch(
     seed: str,
     run_token: str,
 ) -> bool:
-    """One merge-and-trim step (exposed for crash-replay tests; same
-    Hadoop-FS pointer protocol and cleared-checkpoint refusal as
-    ``_countmin_batch``)."""
-    spark = batch_df.sparkSession
-    latest = f"{path}/_latest_{run_token}"
-    out_b = f"{path}/sample_{run_token}_{batch_id}"
-    prev = (_fs_read_small(spark, latest) or "").strip() or None
-    if prev == out_b:
-        return False  # replay after commit
-    if prev is not None and batch_id == 0:
-        raise RuntimeError(
-            "streaming_uniform_sample: batch id 0 arrived over existing "
-            "state (cleared checkpoint reused) — use a fresh checkpoint "
-            f"path or delete the sample state at {path} explicitly."
-        )
-    rank = F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string")))
-    part = batch_df.withColumn("__rk", rank)
-    if prev is not None:
-        part = spark.read.parquet(prev).unionByName(part)
-    from pyspark.sql import Window as _W
+    """One merge-and-trim step (commit protocol: ``_merge_step``)."""
+    def merge(prev):
+        rank = F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string")))
+        part = batch_df.withColumn("__rk", rank)
+        if prev is not None:
+            part = prev.unionByName(part)
+        # the union is <= k + batch rows; the single-partition rank is
+        # bounded by that, never by stream length
+        w = Window.orderBy(F.asc("__rk"), F.asc(id_col))
+        return (part.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") <= k).drop("__rn"))
 
-    w = _W.orderBy(F.asc("__rk"), F.asc(id_col))
-    # the union is <= k + batch rows; the single-partition rank is
-    # bounded by that, never by stream length
-    trimmed = (
-        part.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-    trimmed.coalesce(1).write.mode("overwrite").parquet(out_b)
-    _fs_swap_pointer(spark, latest, out_b)  # pointer advance = the commit
-    if prev is not None:
-        _, hpath, fs = _hfs(spark, prev)
-        fs.delete(hpath(prev), True)
-    return True
+    return _merge_step(batch_df, batch_id, path, run_token, "sample",
+                       "streaming_uniform_sample", merge)
+
+
+def sample_current(spark, path: str, checkpoint: str) -> DataFrame:
+    """The live sample the ``streaming_uniform_sample`` pointer
+    references (ranks column dropped)."""
+    return spark.read.parquet(_current(spark, path, checkpoint)).drop("__rk")
 
 
 def streaming_heavy_hitters(
@@ -465,26 +443,12 @@ def streaming_heavy_hitters(
     upper bound honest: at any point every value with true stream count
     > N/(k+1) is present in the state (mergeable-summaries guarantee),
     so ``heavy_hitters_current`` + one exact recount of the candidates
-    yields the EXACT frequent set, stream-long. Exactly-once via the
-    same Hadoop-FS atomic-pointer protocol as ``streaming_countmin``.
+    yields the EXACT frequent set, stream-long. Exactly-once through
+    ``_merge_step``.
     """
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _heavy_hitters_batch(batch_df, batch_id, path, col, k, run_token)
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    run_token = _run_token(checkpoint)
+    return _start(stream, checkpoint, processing_time, lambda df, i: (
+        _heavy_hitters_batch(df, i, path, col, k, run_token)))
 
 
 def _heavy_hitters_batch(
@@ -495,34 +459,7 @@ def _heavy_hitters_batch(
     k: int,
     run_token: str,
 ) -> bool:
-    """One MG merge-and-trim step (exposed for crash-replay tests; same
-    pointer protocol and cleared-checkpoint refusal as
-    ``_countmin_batch``)."""
-    import pandas as pd
-
-    from ..operators.analytics import (
-        MG_SUMMARY_SCHEMA,
-        mg_partition_summarize,
-    )
-
-    spark = batch_df.sparkSession
-    latest = f"{path}/_latest_{run_token}"
-    out_b = f"{path}/mg_{run_token}_{batch_id}"
-    prev = (_fs_read_small(spark, latest) or "").strip() or None
-    if prev == out_b:
-        return False  # replay after commit
-    if prev is not None and batch_id == 0:
-        raise RuntimeError(
-            "streaming_heavy_hitters: batch id 0 arrived over existing "
-            "state (cleared checkpoint reused) — use a fresh checkpoint "
-            f"path or delete the summary state at {path} explicitly."
-        )
-    part = batch_df.select(F.col(col).cast("string")).mapInPandas(
-        mg_partition_summarize(k), MG_SUMMARY_SCHEMA
-    )
-    merged = part if prev is None else spark.read.parquet(prev).unionByName(part)
-    merged = merged.groupBy("value", "is_meta").agg(F.sum("cnt").alias("cnt"))
-
+    """One MG merge-and-trim step (commit protocol: ``_merge_step``)."""
     def trim(batches):
         counters: dict = {}
         deducted = 0
@@ -545,42 +482,25 @@ def _heavy_hitters_batch(
             }
         )
 
-    # the merged union is sketch-sized (<= k+1 prev rows + (k+1) per
-    # batch partition), so the single-partition trim is bounded by the
-    # summary, never the stream
-    trimmed = merged.coalesce(1).mapInPandas(trim, MG_SUMMARY_SCHEMA)
-    trimmed.coalesce(1).write.mode("overwrite").parquet(out_b)
-    _fs_swap_pointer(spark, latest, out_b)  # pointer advance = the commit
-    if prev is not None:
-        _, hpath, fs = _hfs(spark, prev)
-        fs.delete(hpath(prev), True)
-    return True
+    def merge(prev):
+        part = batch_df.select(F.col(col).cast("string")).mapInPandas(
+            mg_partition_summarize(k), MG_SUMMARY_SCHEMA
+        )
+        merged = part if prev is None else prev.unionByName(part)
+        merged = merged.groupBy("value", "is_meta").agg(F.sum("cnt").alias("cnt"))
+        # the merged union is sketch-sized (<= k+1 prev rows + (k+1) per
+        # batch partition), so the single-partition trim is bounded by the
+        # summary, never the stream
+        return merged.coalesce(1).mapInPandas(trim, MG_SUMMARY_SCHEMA)
+
+    return _merge_step(batch_df, batch_id, path, run_token, "mg",
+                       "streaming_heavy_hitters", merge)
 
 
 def heavy_hitters_current(spark, path: str, checkpoint: str) -> DataFrame:
     """The live MG summary the ``streaming_heavy_hitters`` pointer
     references, as ``(value, lo, hi)`` like ``analytics.mg_summary``."""
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-    cur = _fs_read_small(spark, f"{path}/_latest_{run_token}")
-    if cur is None:
-        raise FileNotFoundError(f"{path}/_latest_{run_token}")
-    from ..operators.analytics import mg_bounds
-
-    return mg_bounds(spark.read.parquet(cur.strip()))
-
-
-def sample_current(spark, path: str, checkpoint: str) -> DataFrame:
-    """The live sample the ``streaming_uniform_sample`` pointer
-    references (ranks column dropped)."""
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-    cur = _fs_read_small(spark, f"{path}/_latest_{run_token}")
-    if cur is None:
-        raise FileNotFoundError(f"{path}/_latest_{run_token}")
-    return spark.read.parquet(cur.strip()).drop("__rk")
+    return mg_bounds(spark.read.parquet(_current(spark, path, checkpoint)))
 
 
 def streaming_histogram(
@@ -598,33 +518,12 @@ def streaming_histogram(
     the state at ``path`` stays histogram-sized forever while the stream
     is unbounded, and `analytics.histogram_tvd` against a frozen
     reference turns it into an exact drift score at any moment.
-
-    Exactly-once via the same pointer protocol as
-    :func:`streaming_countmin`: deterministic per-batch output dir
-    derived from the pointer's current target, then an atomic pointer
-    advance; replays either rebuild the identical dir (before commit) or
-    no-op (after). All pointer I/O goes through the Hadoop FS API —
-    file://, hdfs:// and s3a:// alike.
+    Exactly-once through ``_merge_step``.
     """
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _histogram_batch(
-            batch_df, batch_id, path, key_col, value_col, bin_width, run_token
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    run_token = _run_token(checkpoint)
+    return _start(stream, checkpoint, processing_time, lambda df, i: (
+        _histogram_batch(df, i, path, key_col, value_col, bin_width,
+                         run_token)))
 
 
 def _histogram_batch(
@@ -636,57 +535,23 @@ def _histogram_batch(
     bin_width: float,
     run_token: str,
 ) -> bool:
-    """One histogram merge step (exposed for the crash-replay tests).
-    Returns False when the batch was a replay of an already-committed id
-    (state untouched). Same lineage guard as ``_countmin_batch``: batch
-    id 0 against surviving state from a cleared checkpoint refuses
-    loudly instead of double-counting or resetting."""
-    from ..operators.analytics import value_histogram
+    """One histogram merge step (commit protocol: ``_merge_step``)."""
+    def merge(prev):
+        part = value_histogram(batch_df, key_col, value_col, bin_width)
+        if prev is None:
+            return part
+        return (prev.unionByName(part).groupBy("key", "bin")
+                .agg(F.sum("cnt").alias("cnt")))
 
-    spark = batch_df.sparkSession
-    latest = f"{path}/_latest_{run_token}"
-    out_b = f"{path}/hist_{run_token}_{batch_id}"
-    prev = (_fs_read_small(spark, latest) or "").strip() or None
-    if prev == out_b:
-        return False
-    if prev is not None and batch_id == 0:
-        raise RuntimeError(
-            "streaming_histogram: batch id 0 arrived but this histogram "
-            "path already holds state from a previous lineage of the same "
-            "checkpoint path (checkpoint was cleared and reused). Merging "
-            "would double-count and resetting would destroy the "
-            "accumulated histogram — use a fresh checkpoint path or "
-            f"delete the state at {path} explicitly."
-        )
-    part = value_histogram(batch_df, key_col, value_col, bin_width)
-    if prev is not None:
-        merged = (
-            spark.read.parquet(prev)
-            .unionByName(part)
-            .groupBy("key", "bin")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    else:
-        merged = part
-    merged.coalesce(1).write.mode("overwrite").parquet(out_b)
-    _fs_swap_pointer(spark, latest, out_b)
-    if prev is not None:
-        _, hpath, fs = _hfs(spark, prev)
-        fs.delete(hpath(prev), True)
-    return True
+    return _merge_step(batch_df, batch_id, path, run_token, "hist",
+                       "streaming_histogram", merge)
 
 
 def histogram_current(spark, path: str, checkpoint: str) -> DataFrame:
     """The live ``(key, bin, cnt)`` histogram the ``streaming_histogram``
     pointer references — feed it to ``analytics.histogram_tvd`` against
     a reference histogram for the drift score."""
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-    cur = _fs_read_small(spark, f"{path}/_latest_{run_token}")
-    if cur is None:
-        raise FileNotFoundError(f"{path}/_latest_{run_token}")
-    return spark.read.parquet(cur.strip())
+    return spark.read.parquet(_current(spark, path, checkpoint))
 
 
 def streaming_hll(
@@ -703,27 +568,12 @@ def streaming_hll(
     running table by (bucket, MAX rank), the HLL merge law. Read the
     estimate any time with :func:`hll_current` (identical math to
     `analytics.hll_distinct`, so the streamed sketch equals the batch
-    sketch over the same rows — tested). Same exactly-once pointer
-    protocol as :func:`streaming_countmin` / :func:`streaming_histogram`,
-    all I/O through the Hadoop FS API.
+    sketch over the same rows — tested). Exactly-once through
+    ``_merge_step``.
     """
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _hll_batch(batch_df, batch_id, path, col, p, run_token)
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    run_token = _run_token(checkpoint)
+    return _start(stream, checkpoint, processing_time, lambda df, i: (
+        _hll_batch(df, i, path, col, p, run_token)))
 
 
 def _hll_batch(
@@ -734,62 +584,31 @@ def _hll_batch(
     p: int,
     run_token: str,
 ) -> bool:
-    """One register-merge step (exposed for crash-replay tests); same
-    replay/lineage contract as ``_histogram_batch``."""
-    from ..functions.core import md5_60
-
-    spark = batch_df.sparkSession
-    latest = f"{path}/_latest_{run_token}"
-    out_b = f"{path}/hll_{run_token}_{batch_id}"
-    prev = (_fs_read_small(spark, latest) or "").strip() or None
-    if prev == out_b:
-        return False
-    if prev is not None and batch_id == 0:
-        raise RuntimeError(
-            "streaming_hll: batch id 0 arrived but this sketch path "
-            "already holds state from a previous lineage of the same "
-            "checkpoint path (checkpoint was cleared and reused) — use a "
-            f"fresh checkpoint path or delete the state at {path} "
-            "explicitly."
+    """One register-merge step (commit protocol: ``_merge_step``)."""
+    def merge(prev):
+        q = 60 - p
+        h = md5_60(F.col(col))
+        rest = h.bitwiseAND(F.lit((1 << q) - 1))
+        rank = F.when(rest == 0, F.lit(q + 1)).otherwise(
+            F.lit(q) - F.length(F.bin(rest)) + 1
         )
-    q = 60 - p
-    h = md5_60(F.col(col))
-    rest = h.bitwiseAND(F.lit((1 << q) - 1))
-    rank = F.when(rest == 0, F.lit(q + 1)).otherwise(
-        F.lit(q) - F.length(F.bin(rest)) + 1
-    )
-    part = (
-        batch_df.select(F.shiftright(h, q).alias("b"), rank.alias("r"))
-        .groupBy("b")
-        .agg(F.max("r").alias("r"))
-    )
-    if prev is not None:
-        merged = (
-            spark.read.parquet(prev)
-            .unionByName(part)
+        part = (
+            batch_df.select(F.shiftright(h, q).alias("b"), rank.alias("r"))
             .groupBy("b")
             .agg(F.max("r").alias("r"))
         )
-    else:
-        merged = part
-    merged.coalesce(1).write.mode("overwrite").parquet(out_b)
-    _fs_swap_pointer(spark, latest, out_b)
-    if prev is not None:
-        _, hpath, fs = _hfs(spark, prev)
-        fs.delete(hpath(prev), True)
-    return True
+        if prev is None:
+            return part
+        return prev.unionByName(part).groupBy("b").agg(F.max("r").alias("r"))
+
+    return _merge_step(batch_df, batch_id, path, run_token, "hll",
+                       "streaming_hll", merge)
 
 
 def hll_current(spark, path: str, checkpoint: str, p: int = 12) -> DataFrame:
     """The live distinct-count estimate from the ``streaming_hll``
     register state — one row, `analytics.hll_distinct` columns/math."""
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-    cur = _fs_read_small(spark, f"{path}/_latest_{run_token}")
-    if cur is None:
-        raise FileNotFoundError(f"{path}/_latest_{run_token}")
-    regs = spark.read.parquet(cur.strip())
+    regs = spark.read.parquet(_current(spark, path, checkpoint))
     m = 1 << p
     big_r = 60 - p + 1
     alpha = 0.7213 / (1.0 + 1.079 / m)
@@ -845,30 +664,12 @@ def streaming_ohlc(
     rows land in the right bar with the right open/close, no watermark
     needed (OHLC partials are order-free). Read the live bars any time
     with :func:`ohlc_current` (identical math to `analytics.ohlc_bars`
-    — parity-tested). Same exactly-once pointer protocol as
-    :func:`streaming_countmin` / :func:`streaming_histogram`; all I/O
-    through the Hadoop FS API.
+    — parity-tested). Exactly-once through ``_merge_step``.
     """
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _ohlc_batch(
-            batch_df, batch_id, path, key_col, value_col, time_col,
-            tiebreak_col, bucket_seconds, run_token,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    run_token = _run_token(checkpoint)
+    return _start(stream, checkpoint, processing_time, lambda df, i: (
+        _ohlc_batch(df, i, path, key_col, value_col, time_col,
+                    tiebreak_col, bucket_seconds, run_token)))
 
 
 def _ohlc_batch(
@@ -882,32 +683,15 @@ def _ohlc_batch(
     bucket_seconds: int,
     run_token: str,
 ) -> bool:
-    """One partial-merge step (exposed for crash-replay tests); same
-    replay/lineage contract as ``_histogram_batch``."""
-    from ..operators.analytics import ohlc_partials
-
-    spark = batch_df.sparkSession
-    latest = f"{path}/_latest_{run_token}"
-    out_b = f"{path}/ohlc_{run_token}_{batch_id}"
-    prev = (_fs_read_small(spark, latest) or "").strip() or None
-    if prev == out_b:
-        return False
-    if prev is not None and batch_id == 0:
-        raise RuntimeError(
-            "streaming_ohlc: batch id 0 arrived but this path already "
-            "holds state from a previous lineage of the same checkpoint "
-            "path (checkpoint was cleared and reused). Merging would "
-            "double-count and resetting would destroy the accumulated "
-            "bars — use a fresh checkpoint path or delete the state at "
-            f"{path} explicitly."
+    """One partial-merge step (commit protocol: ``_merge_step``)."""
+    def merge(prev):
+        part = ohlc_partials(
+            batch_df, key_col, value_col, time_col, tiebreak_col, bucket_seconds
         )
-    part = ohlc_partials(
-        batch_df, key_col, value_col, time_col, tiebreak_col, bucket_seconds
-    )
-    if prev is not None:
-        merged = (
-            spark.read.parquet(prev)
-            .unionByName(part)
+        if prev is None:
+            return part
+        return (
+            prev.unionByName(part)
             .groupBy("key", "bucket")
             .agg(
                 F.sum("n_events").alias("n_events"),
@@ -917,28 +701,15 @@ def _ohlc_batch(
                 F.max("cl").alias("cl"),
             )
         )
-    else:
-        merged = part
-    merged.coalesce(1).write.mode("overwrite").parquet(out_b)
-    _fs_swap_pointer(spark, latest, out_b)
-    if prev is not None:
-        _, hpath, fs = _hfs(spark, prev)
-        fs.delete(hpath(prev), True)
-    return True
+
+    return _merge_step(batch_df, batch_id, path, run_token, "ohlc",
+                       "streaming_ohlc", merge)
 
 
 def ohlc_current(spark, path: str, checkpoint: str) -> DataFrame:
     """The live OHLC bars the ``streaming_ohlc`` pointer references —
     identical columns to ``analytics.ohlc_bars``."""
-    import hashlib as _hashlib
-
-    from ..operators.analytics import ohlc_from_partials
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-    cur = _fs_read_small(spark, f"{path}/_latest_{run_token}")
-    if cur is None:
-        raise FileNotFoundError(f"{path}/_latest_{run_token}")
-    return ohlc_from_partials(spark.read.parquet(cur.strip()))
+    return ohlc_from_partials(spark.read.parquet(_current(spark, path, checkpoint)))
 
 
 def streaming_kmv(
@@ -957,27 +728,12 @@ def streaming_kmv(
     seeds), so the streamed sketch is BIT-equal to the batch sketch over
     the same rows. Unlike HLL the surviving hashes also identify a
     uniform sample of the distinct values and support downstream
-    intersection estimates. Same exactly-once pointer protocol as
-    :func:`streaming_countmin` / :func:`streaming_hll`."""
-    import hashlib as _hashlib
-
+    intersection estimates. Exactly-once through ``_merge_step``."""
     if k < 2:
         raise ValueError("streaming_kmv: k must be >= 2")
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _kmv_batch(batch_df, batch_id, path, col, k, run_token)
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    run_token = _run_token(checkpoint)
+    return _start(stream, checkpoint, processing_time, lambda df, i: (
+        _kmv_batch(df, i, path, col, k, run_token)))
 
 
 def _kmv_batch(
@@ -988,63 +744,27 @@ def _kmv_batch(
     k: int,
     run_token: str,
 ) -> bool:
-    """One bottom-k merge step (exposed for crash-replay tests); same
-    replay/lineage contract as ``_hll_batch``."""
-    from ..functions.core import md5_60
-
-    spark = batch_df.sparkSession
-    latest = f"{path}/_latest_{run_token}"
-    out_b = f"{path}/kmv_{run_token}_{batch_id}"
-    prev = (_fs_read_small(spark, latest) or "").strip() or None
-    if prev == out_b:
-        return False
-    if prev is not None and batch_id == 0:
-        raise RuntimeError(
-            "streaming_kmv: batch id 0 arrived but this sketch path "
-            "already holds state from a previous lineage of the same "
-            "checkpoint path (checkpoint was cleared and reused) — use a "
-            f"fresh checkpoint path or delete the state at {path} "
-            "explicitly."
-        )
-    part = (
+    """One bottom-k merge step (commit protocol: ``_merge_step``)."""
+    def merge(prev):
         # cast to string before hashing — batch kmv_distinct hashes the
         # stringified value, so the bit-equality law between streaming
         # and batch sketches must use the identical hash input for
         # non-string columns too
-        batch_df.select(md5_60(F.col(col).cast("string")).alias("h"))
-        .distinct()
-        .orderBy("h")
-        .limit(k)
-    )
-    if prev is not None:
-        merged = (
-            spark.read.parquet(prev)
-            .unionByName(part)
-            .distinct()
-            .orderBy("h")
-            .limit(k)
-        )
-    else:
-        merged = part
-    merged.coalesce(1).write.mode("overwrite").parquet(out_b)
-    _fs_swap_pointer(spark, latest, out_b)
-    if prev is not None:
-        _, hpath, fs = _hfs(spark, prev)
-        fs.delete(hpath(prev), True)
-    return True
+        part = batch_df.select(md5_60(F.col(col).cast("string")).alias("h"))
+        part = part.distinct().orderBy("h").limit(k)
+        if prev is not None:
+            part = prev.unionByName(part).distinct().orderBy("h").limit(k)
+        return part
+
+    return _merge_step(batch_df, batch_id, path, run_token, "kmv",
+                       "streaming_kmv", merge)
 
 
 def kmv_current(spark, path: str, checkpoint: str, k: int = 64) -> DataFrame:
     """The live distinct-count estimate from ``streaming_kmv`` state —
     one row ``(n_hashes, kmv_estimate)``, same estimator as
     ``analytics.kmv_distinct`` (exact below k, else (k-1)·2^60 // h_k)."""
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-    cur = _fs_read_small(spark, f"{path}/_latest_{run_token}")
-    if cur is None:
-        raise FileNotFoundError(f"{path}/_latest_{run_token}")
-    state = spark.read.parquet(cur.strip())
+    state = spark.read.parquet(_current(spark, path, checkpoint))
     agg = state.agg(
         F.count(F.lit(1)).alias("n_hashes"), F.max("h").alias("__hk")
     )
@@ -1081,10 +801,10 @@ def streaming_dedup_against(
     fingerprint state accumulated from earlier batches, and within a
     batch the min-``id_col`` row per fingerprint wins (deterministic).
     Accepted rows land in ``{path}/rows_<token>_<batch>`` (overwrite →
-    idempotent on replay); the fingerprint state advances through the
-    same exactly-once pointer protocol as ``streaming_countmin`` /
-    ``streaming_kmv`` (replayed batch ids are no-ops, a cleared-and-
-    reused checkpoint is refused).
+    idempotent on replay); the fingerprint state is append-only, and a
+    ``_latest_<token>`` pointer to the last committed batch id is the
+    commit (replayed batch ids are no-ops, a cleared-and-reused
+    checkpoint is refused — details on ``_dedup_against_batch``).
 
     Parity law (tested): over any prefix of batches, the accepted
     fingerprint set ≡ distinct(prefix fps) MINUS corpus fps — batching-
@@ -1100,11 +820,7 @@ def streaming_dedup_against(
     fingerprints shard by digest prefix exactly as
     ``dedup.build_bloom_filter`` documents.
     """
-    import hashlib as _hashlib
-
-    from ..operators.dedup import build_bloom_filter
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
+    run_token = _run_token(checkpoint)
     spark = existing.sparkSession
 
     corpus_fps = f"{path}/corpus_fps_{run_token}"
@@ -1149,22 +865,9 @@ def streaming_dedup_against(
         build_bloom_filter(existing, text_col, num_bits, num_hashes)
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _dedup_against_batch(
-            batch_df, batch_id, path, text_col, id_col,
-            bloom, num_bits, num_hashes, run_token,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint, processing_time, lambda df, i: (
+        _dedup_against_batch(df, i, path, text_col, id_col, bloom, num_bits,
+                             num_hashes, run_token)))
 
 
 def _dedup_against_batch(
@@ -1196,8 +899,6 @@ def _dedup_against_batch(
     pointer alone cannot see, batch 0 over prev_id 0 included); a batch
     id BELOW the pointer can only come from a cleared-and-reused
     checkpoint → refuse loudly."""
-    from pyspark.sql import Window
-
     spark = batch_df.sparkSession
     latest = f"{path}/_latest_{run_token}"
     rows_b = f"{path}/rows_{run_token}_{batch_id}"
@@ -1314,18 +1015,22 @@ def _committed_fps_dirs(spark, path: str, run_token: str,
     harmless but a partial one would not; the pointer is the truth."""
     if upto_id is None:
         return []
-    _, hpath, fs = _hfs(spark, path)
     compacted = (_fs_read_small(
         spark, f"{path}/_compacted_{run_token}") or "").strip() or None
     c_id = int(compacted) if compacted is not None else -1
     out = [f"{path}/fpsc_{run_token}_{c_id}"] if c_id >= 0 else []
-    prefix = f"fps_{run_token}_"
-    for st in fs.listStatus(hpath(path)):
-        name = st.getPath().getName()
-        if name.startswith(prefix) and c_id < int(
-                name[len(prefix):]) <= upto_id:
-            out.append(f"{path}/{name}")
+    out += [d for i, d in _id_dirs(spark, path, f"fps_{run_token}_").items()
+            if c_id < i <= upto_id]
     return sorted(out)
+
+
+def _id_dirs(spark, path: str, prefix: str) -> dict[int, str]:
+    """``{id: dir}`` for the ``<prefix><id>`` entries directly under
+    ``path``."""
+    _, hpath, fs = _hfs(spark, path)
+    names = [st.getPath().getName() for st in fs.listStatus(hpath(path))]
+    return {int(n[len(prefix):]): f"{path}/{n}"
+            for n in names if n.startswith(prefix)}
 
 
 def compact_dedup_state(spark, path: str, checkpoint: str) -> int:
@@ -1350,16 +1055,8 @@ def compact_dedup_state(spark, path: str, checkpoint: str) -> int:
     away. Reference analog: the same build-amortization idea as
     ``tdb_cons_append`` (src/tdb_cons.c:574-657).
     """
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-    cur = _fs_read_small(spark, f"{path}/_latest_{run_token}")
-    if cur is None:
-        raise FileNotFoundError(
-            f"no committed streaming_dedup_against state at {path} for "
-            f"this checkpoint ({path}/_latest_{run_token} is absent)"
-        )
-    upto = int(cur.strip())
+    run_token = _run_token(checkpoint)
+    upto = int(_current(spark, path, checkpoint))
     dirs = _committed_fps_dirs(spark, path, run_token, upto)
     per_batch = [d for d in dirs if f"/fps_{run_token}_" in d]
     if not per_batch:
@@ -1375,21 +1072,12 @@ def compact_dedup_state(spark, path: str, checkpoint: str) -> int:
     # accumulate unboundedly across crash cycles. Superseded bsig
     # markers (only the pointer batch's sig is ever read) go too.
     _, hpath, fs = _hfs(spark, path)
-    for st in fs.listStatus(hpath(path)):
-        name = st.getPath().getName()
-        full = f"{path}/{name}"
-        if full == target:
-            continue
-        for prefix in (f"fps_{run_token}_", f"fpsc_{run_token}_",
-                       f"_bsig_{run_token}_"):
-            if name.startswith(prefix):
-                d_id = int(name[len(prefix):])
-                stale = (d_id != upto if prefix.startswith("fpsc")
-                         else d_id < upto if prefix.startswith("_bsig")
-                         else d_id <= upto)
-                if stale:
-                    fs.delete(hpath(full), True)
-                break
+    for prefix, stale in ((f"fps_{run_token}_", lambda i: i <= upto),
+                          (f"fpsc_{run_token}_", lambda i: i != upto),
+                          (f"_bsig_{run_token}_", lambda i: i < upto)):
+        for i, d in _id_dirs(spark, path, prefix).items():
+            if stale(i):
+                fs.delete(hpath(d), True)
     return len(per_batch)
 
 
@@ -1398,19 +1086,8 @@ def dedup_accepted_rows(spark, path: str, checkpoint: str) -> DataFrame:
     union of the per-batch output dirs whose batch id is at or below
     the committed pointer — a batch that crashed mid-write before its
     pointer advance is invisible here until its replay commits."""
-    import hashlib as _hashlib
-
-    run_token = _hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:8]
-    cur = _fs_read_small(spark, f"{path}/_latest_{run_token}")
-    if cur is None:
-        raise FileNotFoundError(f"{path}/_latest_{run_token}")
-    upto = int(cur.strip())
-    _, hpath, fs = _hfs(spark, path)
-    prefix = f"rows_{run_token}_"
-    dirs = [
-        f"{path}/{st.getPath().getName()}"
-        for st in fs.listStatus(hpath(path))
-        if st.getPath().getName().startswith(prefix)
-        and int(st.getPath().getName()[len(prefix):]) <= upto
-    ]
+    run_token = _run_token(checkpoint)
+    upto = int(_current(spark, path, checkpoint))
+    dirs = [d for i, d in _id_dirs(spark, path, f"rows_{run_token}_").items()
+            if i <= upto]
     return spark.read.parquet(*sorted(dirs))

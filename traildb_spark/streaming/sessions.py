@@ -113,15 +113,6 @@ def stateful_trail_counts(
     )
 
 
-def run_batch_equivalence(spark, batch_df: DataFrame, gap_seconds: int = 1800):
-    """Batch-mode evaluation of the streaming query (session_window works
-    in batch too) — used by tests to prove stream/batch parity against the
-    window-function formulation in operators/trails.py."""
-    return streaming_session_counts(
-        batch_df, gap_seconds, ts_col="event_time", watermark="0 seconds"
-    )
-
-
 def streaming_funnel(
     events: DataFrame,
     step_values: list[str],
