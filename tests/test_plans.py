@@ -563,7 +563,8 @@ def test_make_patch_changed_only_narrows_with_semi_joins(spark, sf_dir):
 def test_apply_to_trails_chunked_single_shuffle(spark):
     """The bounded-memory cursor path adds NO exchange beyond the one
     uuid-clustering repartition: sortWithinPartitions is partition-local
-    and mapInPandas is narrow — same shuffle count as apply_to_trails."""
+    and mapInPandas is narrow. apply_to_trails runs on the same walker:
+    one shuffle, MapInPandas, no grouped-map FlatMapGroupsInPandas."""
     import pandas as pd
 
     from traildb_spark.operators import trails
@@ -579,6 +580,16 @@ def test_apply_to_trails_chunked_single_shuffle(spark):
         "uuid string, n long",
     )
     assert audit.num_shuffles(out) == 1, audit.explain_str(out, "simple")
+
+    whole = trails.apply_to_trails(
+        df,
+        lambda pdf: pd.DataFrame({"uuid": [pdf["uuid"].iloc[0]], "n": [len(pdf)]}),
+        "uuid string, n long",
+        max_events_per_trail=None,
+    )
+    plan = audit.explain_str(whole, "simple")
+    assert audit.num_shuffles(whole) == 1, plan
+    assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan, plan
 
 
 def test_fuzzy_dedup_against_no_cross_product(spark):

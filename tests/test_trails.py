@@ -126,6 +126,50 @@ def test_apply_to_trails_whale_guard(spark):
     assert got == {"whale": 50, "u2": 1}
 
 
+def test_apply_to_trails_whole_trail_across_batches(spark):
+    """Trails longer than one Arrow batch (7 rows), shuffled on input,
+    reach fn once each, whole, time-ordered and with a fresh RangeIndex;
+    a trail whose fn returns an empty frame emits no rows."""
+    import random
+
+    import pandas as pd
+
+    rng = random.Random(11)
+    rows = [(f"u{i}", t * 10 + i) for i in range(6) for t in range(8 + 5 * i)]
+    rng.shuffle(rows)
+    df = spark.createDataFrame(rows, ["uuid", "time"])
+
+    def summary(pdf):
+        u = pdf["uuid"].iloc[0]
+        if u == "u3":
+            return pdf.iloc[:0][["uuid"]].assign(n=0, ordered=True, fresh=True)
+        ts = pdf["time"].to_numpy()
+        return pd.DataFrame({
+            "uuid": [u],
+            "n": [len(pdf)],
+            "ordered": [bool((ts[1:] >= ts[:-1]).all())],
+            "fresh": [pdf.index.equals(pd.RangeIndex(len(pdf)))],
+        })
+
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        out = trails.apply_to_trails(
+            df, summary, "uuid string, n long, ordered boolean, fresh boolean"
+        ).collect()
+    finally:
+        if old is None:
+            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+        else:
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+    uuids = [r["uuid"] for r in out]
+    assert sorted(uuids) == ["u0", "u1", "u2", "u4", "u5"]  # once each, u3 empty
+    for r in out:
+        assert r["n"] == 8 + 5 * int(r["uuid"][1:]), r
+        assert r["ordered"] and r["fresh"], r
+
+
 def test_apply_to_trails_chunked_parity_and_streaming(spark):
     """The bounded-memory cursor path (reference stream-at-any-length
     contract, src/tdb_decode.c:227-329): state threads across chunks of

@@ -2,11 +2,13 @@
 
 The reference's primary API is "iterate one trail's events in time order"
 (`src/tdb_decode.c:122-329`, `src/traildb.h:300-326`). Spark-native
-equivalents: window functions over ``partitionBy(uuid).orderBy(time)`` and
-``groupBy(uuid).applyInPandas`` for arbitrary trail programs. Every
-operator here is shuffle-aware: one hash partition on uuid, reused across
-chained trail ops (Catalyst recognizes the shared partitioning and does not
-re-shuffle).
+equivalents: window functions over ``partitionBy(uuid).orderBy(time)``, and
+one sorted-run walker for arbitrary trail programs (``repartition(uuid)`` →
+``sortWithinPartitions(uuid, time)`` → ``mapInPandas``, sliced on uuid
+change): ``apply_to_trails_chunked`` runs a fold over it and
+``apply_to_trails`` a whole-trail function. Every operator here is
+shuffle-aware: one hash partition on uuid, reused across chained trail ops
+(Catalyst recognizes the shared partitioning and does not re-shuffle).
 """
 
 from __future__ import annotations
@@ -41,8 +43,9 @@ def collect_trails(
     the batch analog of draining a cursor (`src/tdb_decode.c:227-329`).
 
     Bounded by max-trail-length (reference allows 2^50 events/trail but
-    practical trails are small); for whale trails use ``apply_to_trails``
-    instead, which streams Arrow batches per group.
+    practical trails are small); for whale trails write the program as a
+    fold for ``apply_to_trails_chunked``, which holds one Arrow batch plus
+    the fold state, never the whole trail.
     """
     fields = fields or [c for c in df.columns if c not in (uuid_col, time_col)]
     ev = F.struct(F.col(time_col).alias(time_col), *[F.col(c) for c in fields])
@@ -221,19 +224,20 @@ def apply_to_trails(
     """The cursor-program escape hatch (reference extension model: iterate
     a trail from C/Python and compute anything, `doc/docs/index.md:21-26`).
 
-    ``fn(pdf: pandas.DataFrame) -> pandas.DataFrame`` receives ONE trail,
-    time-sorted, as a pandas frame (Arrow-batched). This is the 100 TB-safe
-    custom-logic path for BOUNDED trails: work is distributed by uuid
-    hash, no collect — but each trail materializes as ONE pandas frame
-    in a worker, so a whale trail is a worker-OOM hazard (measured: a
-    10M-event whale peaks one worker at ~1.5 GB through this path vs
-    ~120 MB through the chunked fold, SCALE.md).
+    ``fn(pdf: pandas.DataFrame) -> pandas.DataFrame`` runs once per trail
+    on the WHOLE trail, sorted by time, with a fresh ``RangeIndex``; an
+    empty result emits no rows. Events with equal ``time`` arrive in an
+    unspecified order: a program that needs a total order sorts by its
+    own tiebreak column. It is a whole-trail fold on
+    :func:`apply_to_trails_chunked` (same shuffle, sort and trail
+    slicer), so each trail materializes as ONE pandas frame in a worker —
+    a whale trail is a worker-OOM hazard (SCALE.md, "Whale-trail memory
+    bound").
 
     ``max_events_per_trail`` is the guard rail: before launching the
-    grouped UDF, one cheap ``groupBy(uuid).count()`` pre-check (a
-    map-side-combined agg over distinct uuids — small next to the
-    shuffle the grouped UDF itself pays) finds the longest trail and
-    REFUSES when it exceeds the bound, naming
+    program, one cheap ``groupBy(uuid).count()`` pre-check (a
+    map-side-combined agg over distinct uuids) finds the longest trail
+    and REFUSES when it exceeds the bound, naming
     :func:`apply_to_trails_chunked` — the constant-memory fold whose
     contract any whale-safe program must adopt (the reference analog:
     cursors stream trails through a fixed decode buffer so no trail
@@ -242,6 +246,8 @@ def apply_to_trails(
     does not. Pass ``None`` to skip the pre-check (and its extra scan)
     when trail lengths are known-bounded.
     """
+    import pandas as pd
+
     if max_events_per_trail is not None:
         top = (df.groupBy(uuid_col).count()
                .orderBy(F.desc("count")).limit(1).collect())
@@ -257,10 +263,18 @@ def apply_to_trails(
                 "for it."
             )
 
-    def sorted_fn(pdf):
-        return fn(pdf.sort_values(time_col, kind="mergesort"))
+    def step(chunks, chunk):
+        chunks.append(chunk)
+        return chunks, None
 
-    return df.groupBy(uuid_col).applyInPandas(sorted_fn, schema=schema)
+    def finish(chunks):
+        trail = pd.concat(chunks, ignore_index=True)
+        chunks.clear()  # free the chunks before fn holds the whole trail
+        return fn(trail)
+
+    return apply_to_trails_chunked(
+        df, lambda u: [], step, finish, schema, uuid_col, time_col
+    )
 
 
 def apply_to_trails_chunked(
@@ -281,9 +295,9 @@ def apply_to_trails_chunked(
     contract: ``tdb_cursor_next`` refills a fixed 1000-event decode buffer
     however long the trail is (`src/tdb_decode.c:227-329`; trail limit
     2^50 events, `src/tdb_limits.h:19`), so a cursor program's memory is
-    O(buffer + its own state). ``apply_to_trails`` hands the WHOLE trail
-    to pandas as one group — fine to ~10M events (measured, SCALE.md),
-    but a 100M+-event whale pressures one executor. Here the trail never
+    O(buffer + its own state). ``apply_to_trails`` is the whole-trail
+    fold on this walker — fine to ~10M events (measured, SCALE.md), but
+    a 100M+-event whale pressures one executor. Here the trail never
     materializes: events are hash-clustered per uuid, externally sorted
     within partitions by (uuid, time) — shuffle spill keeps the sort
     disk-backed — and ``mapInPandas`` walks the partition's Arrow batches
@@ -298,14 +312,17 @@ def apply_to_trails_chunked(
         full row schema); may emit incremental output
       - ``finish(state) -> out_pdf | None`` — end-of-trail output
 
+    Events with equal ``time`` arrive in an unspecified order; a program
+    that needs a total order breaks ties on its own column.
+
     ``chunk_size`` further splits Arrow batches before ``step`` (the
     analog of ``TDB_OPT_CURSOR_EVENT_BUFFER_SIZE``); default is the Arrow
     batch size (``spark.sql.execution.arrow.maxRecordsPerBatch``).
 
     Prefer ``apply_to_trails`` when trails are known-bounded (simpler
-    whole-trail functions); use this when any trail may exceed executor
-    memory. For folds expressible as window/agg expressions, use those —
-    they stay JVM-side.
+    whole-trail functions); write the fold directly when any trail may
+    exceed executor memory. For folds expressible as window/agg
+    expressions, use those — they stay JVM-side.
     """
     if chunk_size is not None and chunk_size < 1:
         raise ValueError(f"chunk_size must be >= 1, got {chunk_size}")
@@ -356,19 +373,13 @@ def apply_to_trails_chunked(
     return clustered.mapInPandas(run, schema=schema)
 
 
-def session_stats_chunked(
-    df: DataFrame,
-    gap: int = 1800,
-    uuid_col: str = UUID_COL,
-    time_col: str = TIME_COL,
-    chunk_size: int | None = None,
-) -> DataFrame:
-    """``session_stats`` computed through the bounded-memory chunked
-    cursor path — same output as the window formulation (the parity is
-    oracle-checked), demonstrating the reference tutorial's session count
-    (`examples/tutorial_wikipedia_sessions.c:26-47`) as a constant-memory
-    fold: state is (last timestamp, session count, event count), O(1) per
-    trail no matter how many events stream through."""
+def _session_fold(gap: int, uuid_col: str, time_col: str):
+    """The reference tutorial's session count
+    (`examples/tutorial_wikipedia_sessions.c:26-47`) as an
+    ``(init, step, finish)`` cursor fold: state is (last timestamp,
+    session count, event count), O(1) per trail no matter how many events
+    stream through. Shared by the batch walker and the streaming cursor,
+    so their outputs coincide."""
     import pandas as pd
 
     def init(u):
@@ -382,7 +393,7 @@ def session_stats_chunked(
                 st["sessions"] += 1 + gaps
             else:
                 st["sessions"] += gaps + (1 if ts[0] - st["last"] > gap else 0)
-            st["last"] = ts[-1]
+            st["last"] = int(ts[-1])
             st["events"] += len(ts)
         return st, None
 
@@ -395,12 +406,23 @@ def session_stats_chunked(
             }
         )
 
+    return init, step, finish
+
+
+def session_stats_chunked(
+    df: DataFrame,
+    gap: int = 1800,
+    uuid_col: str = UUID_COL,
+    time_col: str = TIME_COL,
+    chunk_size: int | None = None,
+) -> DataFrame:
+    """``session_stats`` computed through the bounded-memory chunked
+    cursor path (:func:`_session_fold`) — same output as the window
+    formulation (the parity is oracle-checked)."""
     uuid_t = dict(df.dtypes)[uuid_col]  # follow the caller's uuid type
     return apply_to_trails_chunked(
         df.select(uuid_col, time_col),
-        init,
-        step,
-        finish,
+        *_session_fold(gap, uuid_col, time_col),
         schema=f"{uuid_col} {uuid_t}, num_sessions long, num_events long",
         uuid_col=uuid_col,
         time_col=time_col,

@@ -43,6 +43,8 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.trails import _session_fold
+
 
 def apply_to_trails_stream(
     events: DataFrame,
@@ -109,8 +111,8 @@ def apply_to_trails_stream(
 
         wm_ms = state.getCurrentWatermarkMs()
         wm_sec = wm_ms // 1000
-        # stable sort: equal timestamps keep arrival order, matching the
-        # batch path's mergesort tiebreak
+        # stable sort: equal timestamps keep arrival order here; neither
+        # this nor the batch cursor promises an order among ties
         buf.sort(key=lambda r: r[0])
         n_final = 0
         while n_final < len(buf) and buf[n_final][0] < wm_sec:
@@ -171,40 +173,12 @@ def streaming_session_stats_cursor(
     (`examples/tutorial_wikipedia_sessions.c:26-47`): constant state
     (last timestamp, session count, event count) per trail, one final
     ``(uuid, num_sessions, num_events)`` row when the trail goes idle —
-    the same fold as ``trails.session_stats_chunked``, so stream and
-    batch outputs coincide for in-watermark data (the parity test's
-    oracle)."""
-    import pandas as pd
-
-    def init(u):
-        return {"uuid": u, "last": None, "sessions": 0, "events": 0}
-
-    def step(st, chunk):
-        ts = chunk["time"].to_numpy()
-        if len(ts):
-            gaps = int((ts[1:] - ts[:-1] > gap).sum())
-            if st["last"] is None:
-                st["sessions"] += 1 + gaps
-            else:
-                st["sessions"] += gaps + (1 if ts[0] - st["last"] > gap else 0)
-            st["last"] = int(ts[-1])
-            st["events"] += len(ts)
-        return st, None
-
-    def finish(st):
-        return pd.DataFrame(
-            {
-                uuid_col: [st["uuid"]],
-                "num_sessions": [st["sessions"]],
-                "num_events": [st["events"]],
-            }
-        )
-
+    the same fold (``trails._session_fold``) as
+    ``trails.session_stats_chunked``, so stream and batch outputs
+    coincide for in-watermark data (the parity test's oracle)."""
     return apply_to_trails_stream(
         events,
-        init,
-        step,
-        finish,
+        *_session_fold(gap, uuid_col, "time"),
         output_schema=f"{uuid_col} string, num_sessions long, num_events long",
         uuid_col=uuid_col,
         ts_col=ts_col,
