@@ -515,10 +515,10 @@ def q34_ngram_jaccard(spark, sf_dir):
 def q35_minhash_lsh(spark, sf_dir):
     """MinHash+LSH near-dup pairs at 7-char shingles, Jaccard ≥0.5 —
     portable math (md5 shingles, rotate-XOR perms) so candidates AND
-    verify reproduce in the DuckDB oracle. The numpy fast path
-    (dedup.minhash_lsh_pairs, xxhash/affine family) stays the exported
-    scale kernel, equivalence-tested against exact Jaccard in
-    tests/test_dedup_text.py (reference ethos: differential everywhere,
+    verify reproduce in the DuckDB oracle. The same function, at 64
+    hashes / 16 bands, is dedup.dedup_fuzzy's default pair finder, and
+    is also checked against exact Jaccard in tests/test_dedup_text.py
+    (reference ethos: differential everywhere,
     tests/c-tests/multi_cursor.c:129-146)."""
     docs = _load(spark, sf_dir, "documents")
     # sig_prune pinned True: this query's oracle mirrors the prune stage
@@ -565,8 +565,9 @@ def q42_dedup_clusters(spark, sf_dir):
 
 def q44_minhash_portable(spark, sf_dir):
     """MinHash+LSH with portable math (md5 shingles, rotate-XOR perms, md5
-    band keys): the ONLY fully oracle-checked LSH pipeline — candidates AND
-    verify reproduced in DuckDB. q35 remains the numpy fast path."""
+    band keys), at the function's defaults: candidates AND verify
+    reproduced in DuckDB. q35 checks the same pipeline at 7-char
+    shingles."""
     docs = _load(spark, sf_dir, "documents")
     # sig_prune pinned True to keep oracle parity (default is now False);
     # max_bucket=256 skew guard mirrored in the oracle's QUALIFY stage
@@ -849,7 +850,7 @@ def q52_emb_neardup_portable(spark, sf_dir):
     """SRP-LSH embedding near-dup with portable math: vectors quantized to
     integers (floor(v*2^20)), ±1 literal hyperplanes — sign bits become
     exact integer comparisons, so candidates AND verify reproduce in
-    DuckDB. q38 remains the numpy-Gaussian fast path (rows-only)."""
+    DuckDB. q38 checks the same pipeline at 24 planes."""
     emb = _load(spark, sf_dir, "embeddings")
     # max_bucket=256 skew guard mirrored in the oracle's QUALIFY stage
     return dedup.embedding_neardup_pairs_portable(
@@ -861,7 +862,7 @@ def q53_sim_topk_portable(spark, sf_dir):
     """ANN top-k via portable sign-LSH (integer-quantized SRP codes,
     hamming-ball probe, quantized-integer cosine rank) — the approximate
     similarity-search pipeline itself oracle-checked end-to-end. q40
-    remains the numpy fast path."""
+    checks the same pipeline at 12 planes / hamming ≤3."""
     emb = _load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -894,9 +895,8 @@ def q38_emb_neardup_lsh(spark, sf_dir):
     pipeline is oracle-checked. 6-bit bands give 64 buckets per band:
     candidate pairs shrink ~6x vs 4-bit banding, which matters because
     every candidate ships two 64-int vectors into the verify kernel. The
-    numpy Gaussian-plane fast path (dedup.embedding_neardup_pairs) stays
-    exported and is soundness-tested against exact pairs in
-    tests/test_dedup_text.py."""
+    same function is also checked against brute-force quantized-cosine
+    pairs in tests/test_dedup_text.py."""
     emb = _load(spark, sf_dir, "embeddings")
     # max_bucket=256 skew guard mirrored in the oracle's QUALIFY stage
     return dedup.embedding_neardup_pairs_portable(
@@ -916,9 +916,9 @@ def q39_sim_topk(spark, sf_dir):
 def q40_sim_topk_lsh(spark, sf_dir):
     """LSH-bucketed ANN top-k with a LONGER code / TIGHTER ball (12
     planes, hamming ≤3) than q53 — portable integer SRP math, so the
-    approximate pipeline is oracle-checked end-to-end. The numpy
-    Gaussian-plane fast path (similarity.lsh_topk) stays exported and is
-    recall-tested against brute force in tests/test_dedup_text.py."""
+    approximate pipeline is oracle-checked end-to-end. The same function
+    is also recall-tested against brute force in
+    tests/test_dedup_text.py."""
     emb = _load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"

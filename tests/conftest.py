@@ -92,7 +92,6 @@ _SLOW_BY_DURATION = {
     "test_streaming_robot_stats_matches_batch",   # 27.6s
     "test_streaming_attribution_matches_batch",   # 25.4s
     "test_max_bucket_skew_guard_bounds_clone_density",  # 24.6s
-    "test_minhash_lsh_pairs",                     # 19.2s
     "test_minhash_index_artifact_roundtrip_and_stale",  # 18.6s
     "test_ngram_jaccard_pairs",                   # 18.1s
     "test_compact_shards_preserves_data",         # 18.0s
@@ -100,14 +99,13 @@ _SLOW_BY_DURATION = {
     "test_mg_summary_bounds_and_guarantee",       # 16.1s
     "test_append_sq8_index_parity_and_refusal",   # 14.8s
     "test_jl_sq8_prebuilt_matches_direct",        # 13.5s
-    "test_minhash_fast_path_sound_vs_exact_jaccard",  # 13.2s
+    "test_minhash_portable_sound_vs_exact_jaccard",  # 13.2s
     "test_streaming_funnel_out_of_order_matches_batch",  # 13.1s
     "test_append_jl_sq8_index_parity",            # 12.8s
     "test_compressed_ann_dim_mismatch_fails_loudly",  # 12.7s
     "test_streaming_attribution_chunked_arrival",  # 12.3s
     "test_ngram_jaccard_freq_order_equivalence",  # 12.3s
     "test_value_frequencies_topk",                # 12.3s
-    "test_minhash_max_bucket_skips_degenerate_buckets",  # 11.9s
     "test_streaming_dedup_against_matches_batch_and_replay",  # 11.8s
     "test_dedup_fuzzy_linear_output",             # 11.3s
     "test_bpe_train_matches_python_reference",    # 11.1s

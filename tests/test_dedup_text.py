@@ -58,18 +58,11 @@ def test_ngram_jaccard_freq_order_equivalence(docs):
     assert plain == ordered and len(plain) > 0
 
 
-def test_minhash_lsh_pairs(docs):
-    got = dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()
-    pairs = {(r["id_a"], r["id_b"]) for r in got}
-    assert (1, 2) in pairs and (1, 3) in pairs and (2, 3) in pairs
-    assert (1, 4) in pairs  # high char-shingle overlap
-    assert not any(5 in p or 6 in p for p in pairs)
-
-
 def test_minhash_lsh_pairs_portable(docs):
     got = dedup.minhash_lsh_pairs_portable(docs, threshold=0.5).collect()
     pairs = {(r["id_a"], r["id_b"]) for r in got}
     assert (1, 2) in pairs and (1, 3) in pairs and (2, 3) in pairs
+    assert (1, 4) in pairs  # high char-shingle overlap
     assert not any(5 in p or 6 in p for p in pairs)
     # exact-dup pairs must carry jaccard exactly 1.0
     j = {(r["id_a"], r["id_b"]): r["jaccard"] for r in got}
@@ -134,20 +127,6 @@ def test_simhash_pairs_two_block_matches_brute_force(spark):
     assert len(brute) < n_all
 
 
-def test_embedding_neardup(spark):
-    rows = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [0.999, 0.01, 0.0, 0.0]),   # near dup of 1
-        (3, [0.0, 1.0, 0.0, 0.0]),      # orthogonal
-        (4, [0.0, 0.998, 0.02, 0.0]),   # near dup of 3
-    ]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got = dedup.embedding_neardup_pairs(df, threshold=0.99)
-    pairs = {(r["id_a"], r["id_b"]) for r in got.collect()}
-    assert (1, 2) in pairs and (3, 4) in pairs
-    assert (1, 3) not in pairs
-
-
 def test_text_stats(docs):
     got = {r["doc_id"]: r for r in text.text_stats(docs).collect()}
     assert got[1]["n_tokens"] == 9
@@ -183,7 +162,9 @@ def test_lsh_topk_recall_on_real_embeddings(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.limit(3).select(F.col("vec_id").alias("query_id"), "embedding")
     exact = similarity.brute_force_topk(emb, queries, k=5).collect()
-    approx = similarity.lsh_topk(emb, queries, k=5, num_planes=8, max_hamming=4).collect()
+    approx = similarity.lsh_topk_portable(
+        emb, queries, k=5, num_planes=8, max_hamming=4
+    ).collect()
     exact_sets = {}
     for r in exact:
         exact_sets.setdefault(r["query_id"], set()).add(r["corpus_id"])
@@ -192,7 +173,9 @@ def test_lsh_topk_recall_on_real_embeddings(spark, sf_dir):
         total += 1
         if r["corpus_id"] in exact_sets[r["query_id"]]:
             hit += 1
-    assert total > 0 and hit / len(exact) >= 0.5  # recall@5 over 3 queries
+    # recall@5 over 3 queries; planes are literals, so the measured 12/15
+    # on sf0.001 is deterministic — the floor sits at it
+    assert total > 0 and hit / len(exact) >= 0.8
 
 
 def test_ivf_topk_runs(spark, sf_dir):
@@ -292,26 +275,13 @@ def test_remove_boilerplate_within_doc_repeat_not_boilerplate(spark):
 def test_dedup_fuzzy_linear_output(docs):
     got = {
         r["doc_id"]: (r["component"], r["is_canonical"])
-        for r in dedup.dedup_fuzzy(
-            docs,
-            pair_fn=lambda reps: dedup.minhash_lsh_pairs(reps, threshold=0.5),
-        ).collect()
+        for r in dedup.dedup_fuzzy(docs).collect()
     }
     assert len(got) == 6  # one row per input doc, always
     # 1,2,3 exact dups; 4 near-dup of the group rep => one cluster, canon 1
     assert got[1] == (1, True)
     assert got[2] == (1, False) and got[3] == (1, False) and got[4] == (1, False)
     assert got[5] == (5, True) and got[6] == (6, True)
-
-
-def test_minhash_max_bucket_skips_degenerate_buckets(spark):
-    # 60 identical docs: every band bucket has 60 members. Capped at 10 the
-    # candidate join must skip them all; uncapped it emits all C(60,2).
-    docs = spark.createDataFrame(
-        [(i, "the very same text repeated") for i in range(60)], ["doc_id", "text"]
-    )
-    assert dedup.minhash_lsh_pairs(docs, max_bucket=10).count() == 0
-    assert dedup.minhash_lsh_pairs(docs).count() == 60 * 59 // 2
 
 
 def test_repetition_stats(spark):
@@ -396,25 +366,27 @@ def test_dedup_against_incremental(spark):
     assert kept == [11]
 
 
-def test_minhash_fast_path_sound_vs_exact_jaccard(spark, sf_dir):
-    """Equivalence discipline for the numpy fast path (the driver's q35 now
-    runs the portable twin; this keeps the xxhash/affine kernel honest):
-    every pair the LSH pipeline emits must carry the EXACT char-shingle
-    Jaccard, and the emitted set must be a subset of the exact >= t pair
-    set (LSH can lose candidates, never invent them). On sf0.001's real
-    dup clusters the banding also recovers every exact pair (recall 1.0
-    at these params), so we assert full set equality."""
-    from traildb_spark.functions.vectorized import char_shingle_hashes_udf
-    from traildb_spark.operators.dedup import _jaccard_hashes_udf
+def test_minhash_portable_sound_vs_exact_jaccard(spark, sf_dir):
+    """Equivalence discipline for the MinHash pipeline at the settings
+    ``dedup_fuzzy`` runs by default (64 hashes / 16 bands, t = 0.7, hot
+    buckets capped at 64): every pair the LSH pipeline emits must carry
+    the EXACT md5 char-shingle Jaccard, and the emitted set must be a
+    subset of the exact >= t pair set (LSH can lose candidates, never
+    invent them). On sf0.001's real dup clusters the banding also
+    recovers every exact pair (recall 1.0 at these params), so we assert
+    full set equality. The q35/q44 oracles check other parameters."""
+    from traildb_spark.operators.dedup import _jaccard_hashes_udf, md5_shingle_hashes
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     got = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()
+        for r in dedup.minhash_lsh_pairs_portable(
+            docs, num_hashes=64, bands=16, threshold=0.7, max_bucket=64
+        ).collect()
     }
     g = docs.select(
         F.col("doc_id").alias("id"),
-        char_shingle_hashes_udf(F.col("text"), 5).alias("grams"),
+        md5_shingle_hashes(F.col("text"), 5).alias("grams"),
     )
     a = g.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a"))
     b = g.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b"))
@@ -425,38 +397,48 @@ def test_minhash_fast_path_sound_vs_exact_jaccard(spark, sf_dir):
             "jaccard",
             F.round(_jaccard_hashes_udf(F.col("grams_a"), F.col("grams_b")), 6),
         )
-        .filter(F.col("jaccard") >= 0.5)
+        .filter(F.col("jaccard") >= 0.7)
         .collect()
     }
+    assert len(exact) > 0
     assert set(got) == set(exact)
     assert got == exact  # values are the exact Jaccard, not an estimate
 
 
-def test_embedding_neardup_fast_path_sound_vs_exact(spark, sf_dir):
-    """The Gaussian-plane SRP fast path must emit a SUBSET of the exact
-    cos>=t pairs with exactly matching cosine values (the verify step is
-    exact — no false positives ever). Recall: sf0.001's near-dup pairs all
-    sit in cos [0.4, 0.5], the weakest zone of the 16-plane/4-band
-    s-curve, where the analytic collision probability is ~0.45; planes
-    are seeded, so the measured 0.47 is deterministic — assert a floor
-    just under it (production near-dups at cos>=0.9 sit at ~0.95+ on the
-    same curve)."""
-    from traildb_spark.functions.vectorized import pairwise_cosine_pairs
+def test_embedding_neardup_portable_sound_vs_exact(spark, sf_dir):
+    """The SRP near-dup pipeline must emit a SUBSET of the brute-force
+    quantized-cosine >= t pairs with exactly matching cosine values (the
+    verify step is exact — no false positives ever). Recall: sf0.001's
+    near-dup pairs all sit in cos [0.4, 0.5], the weakest zone of the
+    16-plane/4-band s-curve; the ±1 planes are literals and the
+    quantization is exact, so the measured 32 of 66 pairs (0.485) is
+    deterministic — the floor sits at it."""
+    from traildb_spark.operators.dedup import quantize_q20, quantized_cosine_udf
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     got = {
         (r["id_a"], r["id_b"]): r["cos"]
-        for r in dedup.embedding_neardup_pairs(
+        for r in dedup.embedding_neardup_pairs_portable(
             emb, threshold=0.4, num_planes=16, bands=4
         ).collect()
     }
+    q = emb.select(
+        F.col("vec_id").alias("id"), quantize_q20(F.col("embedding")).alias("qv")
+    )
+    a = q.select(F.col("id").alias("id_a"), F.col("qv").alias("qa"))
+    b = q.select(F.col("id").alias("id_b"), F.col("qv").alias("qb"))
     exact = {
         (r["id_a"], r["id_b"]): r["cos"]
-        for r in pairwise_cosine_pairs(emb, threshold=0.4).collect()
+        for r in a.join(b, F.col("id_a") < F.col("id_b"))
+        .withColumn(
+            "cos", F.round(quantized_cosine_udf(F.col("qa"), F.col("qb")), 6)
+        )
+        .filter(F.col("cos") >= 0.4)
+        .collect()
     }
     assert set(got) <= set(exact)
     assert all(exact[p] == c for p, c in got.items())
-    assert len(got) >= 0.4 * len(exact)
+    assert len(got) >= 0.48 * len(exact) > 0
 
 
 def test_topk_cosine_tie_break_matches_brute_force(spark):

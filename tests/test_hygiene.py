@@ -43,3 +43,40 @@ def test_every_annotation_resolves():
             failures.append(f"{qualname}: {type(e).__name__}: {e}")
     assert n > 100, n
     assert not failures, "\n".join(failures)
+
+
+def test_every_vectorized_kernel_has_a_caller():
+    """Each top-level def in ``functions/vectorized.py`` must be reached
+    from the program — the package, ``__spark_entry__.py``, ``bench.py``,
+    ``perfbench/`` or ``tools/`` — not only from tests. A kernel that only
+    its own test calls is a second implementation nobody runs."""
+    import ast
+    from pathlib import Path
+
+    root = Path(traildb_spark.__file__).resolve().parent.parent
+    sources = [
+        *(root / "traildb_spark").rglob("*.py"),
+        root / "__spark_entry__.py",
+        root / "bench.py",
+        *(root / "perfbench").rglob("*.py"),
+        *(root / "tools").rglob("*.py"),
+    ]
+    used = set()
+    for path in sources:
+        if path.name.startswith("test_"):
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.add(node.name)
+    kernels = root / "traildb_spark" / "functions" / "vectorized.py"
+    defs = [
+        node.name
+        for node in ast.parse(kernels.read_text()).body
+        if isinstance(node, ast.FunctionDef)
+    ]
+    assert defs
+    assert sorted(set(defs) - used) == []

@@ -282,36 +282,6 @@ def test_word_ngram_flat_equals_naive(spark, texts):
         assert got[i] == _naive_word_ngrams(t, 3), repr(t)
 
 
-@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-@given(st.lists(st.lists(st.integers(-(2**63), 2**63 - 1), max_size=30), min_size=1, max_size=8))
-def test_minhash_flat_equals_naive(spark, arrays):
-    import numpy as np
-
-    from traildb_spark.functions.vectorized import (
-        _MERSENNE,
-        _perm_params,
-        minhash_signatures,
-    )
-
-    df = spark.createDataFrame(
-        [(i, a) for i, a in enumerate(arrays)], "i int, h array<long>"
-    )
-    got = {
-        r["i"]: list(r["s"])
-        for r in df.select("i", minhash_signatures(F.col("h"), 16).alias("s")).collect()
-    }
-    a, b = _perm_params(16)
-    for i, hs in enumerate(arrays):
-        if not hs:
-            assert got[i] == [0] * 16
-            continue
-        # int64 directly (the uint64 detour is bit-identical for in-range
-        # longs and trips numpy 2.x's out-of-bound deprecation)
-        h = np.asarray(hs, dtype=np.int64)
-        m = (a[:16, None] * (h[None, :] % _MERSENNE) + b[:16, None]) % _MERSENNE
-        assert got[i] == m.min(axis=1).tolist(), hs
-
-
 @settings(max_examples=50, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     st.lists(st.integers(min_value=-32768, max_value=32767), min_size=0, max_size=500),

@@ -210,10 +210,13 @@ def heavy(spark):
             similarity.ivf_topk(emb, queries, k=10, num_centroids=256, nprobe=8)
         ),
     )
+    dim = len(emb.first()["embedding"])
     timed(
         "lsh_topk_500k",
         lambda: _force(
-            similarity.lsh_topk(emb, queries, k=10, num_planes=16)
+            similarity.lsh_topk_portable(
+                emb, queries, k=10, num_planes=16, max_hamming=2, dim=dim
+            )
         ),
     )
 

@@ -1,12 +1,18 @@
 """Arrow-vectorized numpy kernels for the hot paths.
 
 Catalyst higher-order functions (transform/aggregate) are evaluated
-per-element in interpreted mode — fine for filters, too slow for dense
-linear algebra and 64-way hash signatures. These kernels keep the
+per-element in interpreted mode — fine for filters, too slow for
+per-shingle hashing and dense linear algebra. These kernels keep the
 JVM-side plan for everything relational (joins, dedup, shuffles) and drop
 to Arrow-batched numpy only for the inner numeric loop, which is the
 pattern that survives 100 TB: work stays distributed, each task does one
 BLAS/bit-ops call per batch.
+
+What lives here: batch-flattened shingle hashing (char k-shingles, the
+md5 60-bit family the portable MinHash pipeline and its oracle share,
+word n-grams), SimHash, and the exact cosine kernels (row-wise, all-pairs,
+top-k). MinHash signatures and SRP codes are built by the portable LSH
+pipelines in ``operators.dedup``.
 """
 
 from __future__ import annotations
@@ -18,9 +24,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
-
-# Mersenne-prime affine permutation family for MinHash: h_j(x) = (a_j*x+b_j) mod p
-_MERSENNE = (1 << 61) - 1
 
 import re as _re
 
@@ -152,18 +155,15 @@ def char_shingle_hashes_udf(text: Column, k: int = 5) -> Column:
     @F.pandas_udf(ArrayType(LongType()))
     def sh(col: pd.Series) -> pd.Series:
         texts = [_pynorm(t or "") for t in col]
-        grams, _, _ = _char_shingle_flat(texts, k)
-        return pd.Series(grams)
+        return pd.Series(_char_shingle_flat(texts, k))
 
     return sh(text)
 
 
-def _char_shingle_flat(
-    texts: list, k: int
-) -> tuple[list[np.ndarray], np.ndarray, np.ndarray]:
+def _char_shingle_flat(texts: list, k: int) -> list[np.ndarray]:
     """Batch-flattened FNV rolling-hash char shingling (see
-    char_shingle_hashes_udf for semantics). Returns (per-doc sorted
-    distinct arrays, their concatenation, per-doc start offsets)."""
+    char_shingle_hashes_udf for semantics). Returns one sorted-distinct
+    int64 array per input text."""
     P = np.uint64(1099511628211)  # FNV prime
     powers = P ** np.arange(k, dtype=np.uint64)[::-1]
     lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=len(texts))
@@ -195,58 +195,7 @@ def _char_shingle_flat(
         arrays = _per_doc_sorted_unique(h_all[starts], doc_ids, len(long_idx))
         for d, i in enumerate(long_idx):
             out[i] = arrays[d]
-    glens = np.fromiter((len(g) for g in out), dtype=np.int64, count=len(out))
-    offs = np.concatenate(([0], np.cumsum(glens)[:-1])) if out else np.empty(0, np.int64)
-    flat = np.concatenate(out) if out else np.empty(0, np.int64)
-    return out, flat, offs
-
-
-def _minhash_from_flat(
-    flat: np.ndarray, offs: np.ndarray, ndocs: int, a: np.ndarray, b: np.ndarray
-) -> np.ndarray:
-    """(num_hashes, ndocs) MinHash matrix from a flat hash buffer via
-    reduceat, 8 permutation rows per pass (bounded memory). Elementwise
-    int64 wraparound matches the historical per-doc affine transform."""
-    num_hashes = len(a)
-    hm = flat % _MERSENNE
-    sigs = np.empty((num_hashes, ndocs), dtype=np.int64)
-    for s0 in range(0, num_hashes, 8):
-        s1 = min(s0 + 8, num_hashes)
-        m = (a[s0:s1, None] * hm[None, :] + b[s0:s1, None]) % _MERSENNE
-        sigs[s0:s1] = np.minimum.reduceat(m, offs, axis=1)
-    return sigs
-
-
-def char_shingle_minhash_udf(
-    text: Column, k: int = 5, num_hashes: int = 64
-) -> Column:
-    """Fused text → struct(n_grams, sig): char-shingle hashing AND the
-    MinHash signature in ONE Arrow pass. The shingle arrays never leave the
-    Python worker — no JVM round-trip, no columnar cache of array<long>
-    grams (measured ~4× the UDF cost itself), no gram arrays in any
-    shuffle. Callers re-derive exact-verify grams for the bounded survivor
-    set via char_shingle_hashes_udf on a semi-join."""
-    a, b = _perm_params(num_hashes)
-
-    @F.pandas_udf("struct<n_grams: long, sig: array<long>>")
-    def gs(col: pd.Series) -> pd.DataFrame:
-        texts = [_pynorm(t or "") for t in col]
-        grams, flat, offs = _char_shingle_flat(texts, k)
-        if len(flat):
-            sigs = _minhash_from_flat(flat, offs, len(grams), a, b)
-            sig_list = [sigs[:, d] for d in range(len(grams))]
-        else:
-            sig_list = []
-        return pd.DataFrame(
-            {
-                "n_grams": np.fromiter(
-                    (len(g) for g in grams), dtype=np.int64, count=len(grams)
-                ),
-                "sig": sig_list,
-            }
-        )
-
-    return gs(text)
+    return out
 
 
 def word_ngram_hashes_udf(text: Column, n: int = 3) -> Column:
@@ -320,51 +269,6 @@ def _word_ngram_flat(col: list, n: int) -> list:
     return out
 
 
-def _perm_params(num_hashes: int) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.RandomState(42)  # deterministic family
-    a = rng.randint(1, _MERSENNE, size=num_hashes, dtype=np.int64) | 1
-    b = rng.randint(0, _MERSENNE, size=num_hashes, dtype=np.int64)
-    return a, b
-
-
-def minhash_signatures(hash_arrays: Column, num_hashes: int = 64) -> Column:
-    """array<long> of element hashes → array<long> MinHash signature.
-
-    One xxhash64 per shingle happens JVM-side; the permutations run as
-    numpy broadcasts over the batch's CONCATENATED hash buffer with
-    per-doc minima via ``np.minimum.reduceat`` — no per-document Python
-    loop. Permutation rows go in blocks of 8 so the (rows, total_hashes)
-    intermediate stays within a fixed memory budget regardless of batch
-    size."""
-    a, b = _perm_params(num_hashes)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def sig(col: pd.Series) -> pd.Series:
-        lens = np.fromiter(
-            (0 if hs is None else len(hs) for hs in col),
-            dtype=np.int64,
-            count=len(col),
-        )
-        out: list = [None] * len(col)
-        for i in np.nonzero(lens == 0)[0]:
-            out[i] = np.zeros(num_hashes, dtype=np.int64)
-        idx = np.nonzero(lens > 0)[0]
-        if len(idx):
-            # int64 directly: the old uint64→int64 round trip was
-            # bit-identical for in-range longs but trips numpy 2.x's
-            # out-of-bound-python-int deprecation on negative hashes
-            flat = np.concatenate(
-                [np.asarray(col[i], dtype=np.int64) for i in idx]
-            )
-            offs = np.concatenate(([0], np.cumsum(lens[idx])[:-1]))
-            sigs = _minhash_from_flat(flat, offs, len(idx), a, b)
-            for d, i in enumerate(idx):
-                out[i] = sigs[:, d]
-        return pd.Series(out)
-
-    return sig(hash_arrays)
-
-
 def simhash_from_hashes(hash_arrays: Column) -> Column:
     """array<long> token hashes → 64-bit SimHash (per-bit majority vote),
     numpy bit-unpack per Arrow batch."""
@@ -397,35 +301,6 @@ def simhash_from_hashes(hash_arrays: Column) -> Column:
         return pd.Series(out)
 
     return sh(hash_arrays)
-
-
-_PLANES: dict = {}
-
-
-def _planes(dim: int, num_planes: int, seed: int) -> np.ndarray:
-    """Deterministic hyperplane matrix — same on driver and every executor
-    (seeded RandomState, cached per (dim, planes, seed))."""
-    key = (dim, num_planes, seed)
-    if key not in _PLANES:
-        _PLANES[key] = np.random.RandomState(seed).standard_normal((dim, num_planes))
-    return _PLANES[key]
-
-
-def srp_code(vec: Column, num_planes: int = 16, seed: int = 1234) -> Column:
-    """Sign-random-projection code: array<float> → int64 bit code via one
-    GEMM per Arrow batch. The shared kernel for LSH bucketing of embeddings
-    (dedup.embedding_neardup_pairs, similarity.lsh_topk)."""
-
-    @F.pandas_udf(LongType())
-    def code_udf(col: pd.Series) -> pd.Series:
-        mat = np.vstack(col.to_numpy()).astype(np.float64)
-        bits = (mat @ _planes(mat.shape[1], num_planes, seed)) >= 0
-        code = np.zeros(len(col), dtype=np.int64)
-        for p in range(num_planes):
-            code |= bits[:, p].astype(np.int64) << p
-        return pd.Series(code)
-
-    return code_udf(vec)
 
 
 def _round_half_up(x: np.ndarray, digits: int) -> np.ndarray:
@@ -468,14 +343,16 @@ def pairwise_cosine_pairs(
     O(n²) compute but O(n) shuffle: each partition multiplies its batch
     against the broadcast matrix and emits only surviving pairs. The
     broadcast bounds n to ~1e6 rows; beyond that use the LSH variant
-    (operators.dedup.embedding_neardup_pairs) — this guard enforces it.
+    (operators.dedup.embedding_neardup_pairs_portable) — this guard
+    enforces it.
     """
     spark = df.sparkSession
     n = df.count()
     if n > max_broadcast_rows:
         raise ValueError(
             f"pairwise_cosine_pairs is the exact/batch path (n={n} > "
-            f"{max_broadcast_rows}); use embedding_neardup_pairs (LSH) at scale"
+            f"{max_broadcast_rows}); use embedding_neardup_pairs_portable "
+            "(LSH) at scale"
         )
     pdf = df.select(id_col, vec_col).toPandas()
     ids = pdf[id_col].to_numpy()

@@ -898,7 +898,7 @@ def leakage_safe_split(
     each id independently, so two near-identical docs can land in train
     AND val; the model then "generalizes" to its own training data).
     Given any similarity pair set (`dedup.simhash_pairs`,
-    `minhash_lsh_pairs`, `set_jaccard_pairs` output renamed to
+    `minhash_lsh_pairs_portable`, `set_jaccard_pairs` output renamed to
     ``id_a/id_b``...), documents are grouped into connected components
     and the SPLIT IS HASHED FROM THE COMPONENT LABEL (min id — the
     `dedup_clusters` convention), so every member of a cluster moves

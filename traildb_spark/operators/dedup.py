@@ -300,134 +300,7 @@ def ngram_jaccard_pairs(
 
 
 # --------------------------------------------------------------------------
-# MinHash + LSH
-# --------------------------------------------------------------------------
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 5,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.7,
-    verify: bool = True,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Near-duplicate pairs via MinHash banding.
-
-    num_hashes/bands rows per band; two docs collide if any band's row-slice
-    matches exactly. With 64 hashes / 16 bands (r=4) the S-curve knee sits
-    near Jaccard ~0.5-0.6. ``verify=True`` re-checks candidates with exact
-    shingle Jaccard >= threshold (false positives removed; the standard
-    LSH-then-verify pipeline). Shuffle key = (band_idx, band_hash):
-    uniformly distributed by construction.
-
-    ``max_bucket`` is the skew guard: a band bucket of B members emits B²
-    candidate rows, and low-entropy corpora (templates, boilerplate, tiny
-    vocabularies) produce degenerate mega-buckets that are almost entirely
-    false positives (measured: 56M candidate rows from 55k word-salad docs
-    at r=4). Buckets above the cap are skipped before the self-join; a true
-    pair skipped in one band has bands-1 further chances to collide, so
-    recall loss is negligible while the candidate join drops orders of
-    magnitude. None = exact banding semantics (the oracle-checked default);
-    production fuzzy dedup (``dedup_fuzzy``) caps at 64.
-    """
-    from ..functions.vectorized import char_shingle_hashes_udf, char_shingle_minhash_udf
-
-    rows = num_hashes // bands
-    # Fused shingle+signature UDF: gram arrays stay inside the Python
-    # worker; only (id, n_grams, sig) is cached — 64 longs per doc, cheap
-    # columnar cache, nothing heavy in any shuffle. Exact-verify re-derives
-    # grams from text for the bounded survivor set only (see below).
-    raw = _spread(df).select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("__text")
-    )
-    base = _materialize(
-        raw.select(
-            "id", char_shingle_minhash_udf(F.col("__text"), shingle_k, num_hashes).alias("gs")
-        )
-        .select("id", F.col("gs.n_grams").alias("n_grams"), F.col("gs.sig").alias("sig"))
-        .filter(F.col("n_grams") > 0)
-    )
-    sig = base.select("id", "sig")
-    # banding carries ids only — gram arrays stay out of the shuffle
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.hash(F.slice("sig", b * rows + F.lit(1), rows)).alias("bh"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-    banded = _cap_band_buckets(banded, max_bucket)
-    a = banded.select(F.col("id").alias("id_a"), "band", "bh")
-    b = banded.select(F.col("id").alias("id_b"), "band", "bh")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    if not verify:
-        return cand
-    # two-stage verification: (1) cheap signature-agreement estimate over
-    # the 64-long signatures prunes the (large) candidate set; (2) exact
-    # Jaccard over the full shingle arrays only for survivors. The estimate
-    # margin (2.5 sigma at 64 hashes) makes stage-1 false-drops negligible.
-    est_margin = 2.5 * (0.25 / num_hashes) ** 0.5
-    sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-
-    @F.pandas_udf("double")
-    def _sig_agree(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        if len(xs) == 0:
-            return pd.Series(np.empty(0))
-        # concatenate+reshape, NOT vstack: vstack wraps every row through
-        # atleast_2d in Python (measured ~10× slower at 500k candidates)
-        X = np.concatenate(xs.to_numpy()).reshape(len(xs), -1)
-        Y = np.concatenate(ys.to_numpy()).reshape(len(ys), -1)
-        return pd.Series((X == Y).mean(axis=1))
-
-    pruned = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est", _sig_agree(F.col("sig_a"), F.col("sig_b")))
-        .filter(F.col("est") >= F.lit(threshold - est_margin))
-        .select("id_a", "id_b")
-    )
-    # exact verify: grams recomputed from text for surviving ids only
-    pruned = _materialize(pruned)
-    ids = (
-        pruned.select(F.col("id_a").alias("id"))
-        .union(pruned.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    surv = _materialize(
-        raw.join(ids, "id", "left_semi").select(
-            "id", char_shingle_hashes_udf(F.col("__text"), shingle_k).alias("grams")
-        )
-    )
-    ga = surv.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = surv.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b"))
-    return (
-        pruned.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(_jaccard_hashes_udf(F.col("grams_a"), F.col("grams_b")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-# --------------------------------------------------------------------------
-# MinHash + LSH, portable-math variant (cross-engine reproducible)
+# MinHash + LSH (portable math: every step reproducible in ANSI SQL)
 # --------------------------------------------------------------------------
 
 _MASK60 = (1 << 60) - 1
@@ -592,8 +465,9 @@ def _cap_band_buckets(banded: DataFrame, max_bucket) -> DataFrame:
     deterministic — a pure function of the banded table — so SQL oracles
     mirror it exactly (COUNT(*) OVER (PARTITION BY band, bh)) and capped
     pipelines stay fully differential-checked. Recall note: a dropped
-    bucket loses only pairs not certified by any OTHER band — the same
-    trade the numpy fast path has always made (minhash_lsh_pairs)."""
+    bucket loses only pairs not certified by any OTHER band; ``dedup_fuzzy``
+    caps at 64 and its perfbench check asserts recall 1.0 on planted
+    near-duplicate groups."""
     if max_bucket is None:
         return banded
     bw = Window.partitionBy("band", "bh")
@@ -626,9 +500,9 @@ def minhash_lsh_pairs_portable(
 ) -> DataFrame:
     """MinHash banding with every step reproducible in ANSI SQL: md5-prefix
     shingle hashes, rotate-XOR permutations (no overflow), md5 band keys,
-    exact Jaccard verify. Same plan shape as minhash_lsh_pairs (the numpy
-    fast path); exists so the full LSH pipeline — candidates AND verify —
-    can be differentially tested against a DuckDB oracle.
+    exact Jaccard verify. The one MinHash-LSH implementation: the full
+    pipeline — candidates AND verify — is differentially tested against a
+    DuckDB oracle (q35/q44), and ``dedup_fuzzy`` runs it by default.
 
     ``pair_filter``: optional predicate builder ``(id_a: Column, id_b:
     Column) -> Column`` applied to CANDIDATES before the exact-verify
@@ -1457,104 +1331,6 @@ def resolve_duplicates(
 
 
 # --------------------------------------------------------------------------
-# embedding-cosine near-dup
-# --------------------------------------------------------------------------
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def embedding_neardup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    num_planes: int = 16,
-    bands: int = 4,
-) -> DataFrame:
-    """Pairs with cosine >= threshold via sign-random-projection LSH.
-
-    Hyperplanes are deterministic (seeded numpy normals, same on every
-    executor). Sign bits pack into a long code (one pandas-UDF GEMM per
-    Arrow batch); bands are bit-slices of the code extracted JVM-side;
-    candidates collide on any band, then verify exactly (vectorized
-    cosine). At 100 TB this is the scale path; brute force is O(n²).
-
-    Shuffle discipline: banding and the candidate join carry ONLY
-    (id, 8-byte code) — never the vector. A Hamming pre-filter on the full
-    codes (P(sign differs) = arccos(cos)/π per plane, cut at +3σ so exact
-    recall is preserved within the candidate set) prunes before the pair
-    dedup shuffle; vectors are joined back only for survivors.
-    """
-    import math
-
-    from ..functions.vectorized import cosine_udf, srp_code
-
-    bits_per_band = num_planes // bands
-    base = _materialize(
-        _spread(df).select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            srp_code(F.col(vec_col), num_planes).alias("code"),
-        )
-    )
-    mask = (1 << bits_per_band) - 1
-    banded = base.select(
-        "id",
-        "code",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.shiftright(F.col("code"), bi * bits_per_band)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bh"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "code", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-    p_diff = math.acos(max(-1.0, min(1.0, threshold))) / math.pi
-    ham_max = int(
-        math.ceil(
-            num_planes * p_diff + 3.0 * math.sqrt(num_planes * p_diff * (1 - p_diff))
-        )
-    )
-    a = banded.select(F.col("id").alias("id_a"), F.col("code").alias("code_a"), "band", "bh")
-    b = banded.select(F.col("id").alias("id_b"), F.col("code").alias("code_b"), "band", "bh")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.bit_count(F.col("code_a").bitwiseXOR(F.col("code_b"))) <= F.lit(ham_max)
-        )
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    va = base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
-    vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cos", cosine_udf(F.col("v_a"), F.col("v_b")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
-
-
-# --------------------------------------------------------------------------
 # full fuzzy-dedup pipeline (exact collapse → LSH → clusters → keep-list)
 # --------------------------------------------------------------------------
 
@@ -1577,11 +1353,16 @@ def dedup_fuzzy(
     cluster to its exact copies with one broadcast-sized join.
 
     ``pair_fn(reps) -> (id_a, id_b, ...)`` defaults to
-    ``minhash_lsh_pairs``; pass a lambda to change thresholds/method.
+    ``minhash_lsh_pairs_portable`` at 64 hashes / 16 bands, Jaccard >= 0.7,
+    hot buckets capped at 64 (pure candidates → exact-verify, no
+    signature prune); pass a lambda to change thresholds/method.
     Output: (id, component, is_canonical) for EVERY input doc.
     """
     pair_fn = pair_fn or (
-        lambda reps: minhash_lsh_pairs(reps, text_col, id_col, max_bucket=64)
+        lambda reps: minhash_lsh_pairs_portable(
+            reps, text_col, id_col, num_hashes=64, bands=16, threshold=0.7,
+            max_bucket=64,
+        )
     )
     h = F.sha2(normalize_text(F.col(text_col)), 256)
     w = Window.partitionBy("__h").orderBy(F.col(id_col))
@@ -1610,7 +1391,7 @@ def dedup_fuzzy(
 
 
 # --------------------------------------------------------------------------
-# embedding near-dup, portable-math variant (cross-engine reproducible)
+# embedding near-dup (portable math: every step reproducible in ANSI SQL)
 # --------------------------------------------------------------------------
 
 _Q_SCALE = 1 << 20  # quantization: floor(v * 2^20) — exact in any engine
@@ -1849,8 +1630,8 @@ def embedding_neardup_pairs_portable(
     ops — so the kernel can run as a vectorized Arrow batch in numpy and
     still match DuckDB's list_sum bit-for-bit (a float sequential fold
     would force interpreted per-element evaluation; measured ~3× slower
-    on the candidate set). Same banding/shuffle shape as
-    embedding_neardup_pairs (the numpy fast path).
+    on the candidate set). The one SRP near-dup implementation,
+    oracle-checked at two shapes (q38, q52).
     """
     base, banded = _portable_srp_banded(df, vec_col, id_col, num_planes, bands, dim)
     banded = _cap_band_buckets(banded, max_bucket)

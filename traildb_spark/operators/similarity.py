@@ -14,8 +14,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectorized import cosine_udf, srp_code
-from .dedup import cosine, _dot, _norm
+from ..functions.vectorized import cosine_udf
 
 
 def brute_force_topk(
@@ -50,44 +49,6 @@ def brute_force_topk(
         vec_col=vec_col,
         id_col=id_col,
         query_id_col=query_id_col,
-    )
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    num_planes: int = 12,
-    max_hamming: int = 2,
-) -> DataFrame:
-    """Approximate top-k: restrict scoring to corpus vectors whose
-    sign-projection code is within ``max_hamming`` bits of the query's code,
-    then exact-rank the candidates. Probe expansion (hamming ball) keeps
-    recall high; candidates shrink the scan by ~2^planes/volume(ball).
-    Codes come from the shared GEMM kernel (one matmul per Arrow batch).
-    """
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"),
-        F.col(vec_col).alias("cv"),
-        srp_code(F.col(vec_col), num_planes).alias("ccode"),
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        srp_code(F.col(vec_col), num_planes).alias("qcode"),
-    )
-    joined = c.join(F.broadcast(q)).filter(
-        F.bit_count(F.col("ccode").bitwiseXOR(F.col("qcode"))) <= max_hamming
-    )
-    scored = joined.withColumn("cos", cosine_udf(F.col("cv"), F.col("qv")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cos", "rank")
     )
 
 
@@ -328,14 +289,18 @@ def lsh_topk_portable(
     max_hamming: int = 4,
     dim: int = 64,
 ) -> DataFrame:
-    """``lsh_topk`` with engine-portable math: SRP codes from
-    integer-quantized dots on ±1 literal hyperplanes (see
-    dedup.portable_srp_code) and quantized-integer cosine ranking
-    (dedup.quantized_cosine_udf — exact order-free int sums, so the numpy
-    execution matches SQL bit-for-bit), so the ENTIRE approximate
-    pipeline — candidate ball and ranking — reproduces in a SQL oracle.
-    Same plan shape as the fast path: corpus never re-partitions, queries
-    broadcast, one shuffle for the rank window.
+    """Approximate top-k via sign-LSH: restrict scoring to corpus vectors
+    whose SRP code is within ``max_hamming`` bits of the query's code, then
+    exact-rank the candidates. Probe expansion (hamming ball) keeps recall
+    high; candidates shrink the scan by ~2^planes/volume(ball).
+
+    Engine-portable math: SRP codes from integer-quantized dots on ±1
+    literal hyperplanes (see dedup.portable_srp_code) and quantized-integer
+    cosine ranking (dedup.quantized_cosine_udf — exact order-free int sums,
+    so the numpy execution matches SQL bit-for-bit), so the ENTIRE
+    approximate pipeline — candidate ball and ranking — reproduces in a
+    SQL oracle (q40, q53). Corpus never re-partitions, queries broadcast,
+    one shuffle for the rank window. ``dim`` is the embedding width.
     """
     from .dedup import portable_srp_code, quantize_q20, quantized_cosine_udf
 

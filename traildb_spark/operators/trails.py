@@ -100,10 +100,6 @@ def trail_ids(df: DataFrame, uuid_col: str = UUID_COL) -> DataFrame:
     )
 
 
-def with_trail_id(df: DataFrame, uuid_col: str = UUID_COL) -> DataFrame:
-    return df.join(trail_ids(df, uuid_col), uuid_col)
-
-
 def only_diff_items(
     df: DataFrame,
     uuid_col: str = UUID_COL,
