@@ -284,6 +284,59 @@ def test_dedup_fuzzy_linear_output(docs):
     assert got[5] == (5, True) and got[6] == (6, True)
 
 
+def test_dedup_fuzzy_job_budget(spark, docs):
+    """``dedup_fuzzy`` starts no job whose only work is to fill a pin
+    (no ``count()`` of the signature table or the capped bands) and
+    decides the union-find route with one bounded collect. On this
+    fixture (local[4], 4 shuffle partitions) it runs 20-21 jobs; it ran
+    39-40 when the pipeline pre-counted its pins, counted the edges
+    before collecting them and re-hashed the verify survivors."""
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup_fuzzy_budget", "dedup_fuzzy_budget")
+    try:
+        out = dedup.dedup_fuzzy(docs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("dedup_fuzzy_budget"))
+    assert len(out) == 6
+    assert jobs <= 24, jobs
+
+
+def test_minhash_index_grams_equal_md5_shingle_hashes(spark, tmp_path):
+    """``save_minhash_index`` and ``append_minhash_index`` write ``grams/``
+    from the signature pass: for every corpus id (empty, NULL, shorter
+    than k and non-ASCII texts included) the stored array is exactly what
+    :func:`md5_shingle_hashes` gives, and no id is missing or extra."""
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, ""),
+        (3, None),
+        (4, "abc"),
+        (5, "Grüße aus Köln, schöne Grüße"),
+        (6, "the quick brown fox jumps over the lazy cat"),
+    ]
+    more = [(7, "completely different content about spark engines"), (8, "  ")]
+    schema = "doc_id long, text string"
+    corpus = spark.createDataFrame(rows, schema)
+    extra = spark.createDataFrame(more, schema)
+    idx = str(tmp_path / "mh_idx")
+    dedup.save_minhash_index(corpus, idx, shingle_k=5, num_hashes=16, bands=4)
+    dedup.append_minhash_index(extra, idx)
+    stored = {
+        r["id"]: list(r["grams"])
+        for r in spark.read.parquet(f"{idx}/grams").collect()
+    }
+    want = {
+        r["doc_id"]: list(r["g"])
+        for r in corpus.unionByName(extra).select(
+            "doc_id", dedup.md5_shingle_hashes(F.col("text"), 5).alias("g")
+        ).collect()
+    }
+    assert stored == want
+
+
 def test_repetition_stats(spark):
     rows = [
         (1, "spam spam spam spam"),                      # one word only

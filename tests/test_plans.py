@@ -610,6 +610,74 @@ def test_fuzzy_dedup_against_no_cross_product(spark):
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan, plan
 
 
+def _python_evals(df) -> dict[str, bool]:
+    """Run ``df`` and map each distinct ``ArrowEvalPython`` node of its
+    executed plan (cached relations, query stages and reused exchanges
+    included) to whether it sits below a round-robin exchange."""
+    df.collect()
+    out: dict[str, bool] = {}
+
+    def walk(node, below_rr):
+        cls = node.getClass().getSimpleName()
+        if cls == "ArrowEvalPythonExec":
+            key = node.simpleString(200)
+            out[key] = out.get(key, False) or below_rr
+        below_rr = below_rr or (
+            cls == "ShuffleExchangeExec"
+            and node.outputPartitioning().toString().startswith("RoundRobin")
+        )
+        if cls == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif cls.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        elif cls == "ReusedExchangeExec":
+            kids = [node.child()]
+        elif cls == "InMemoryTableScanExec":
+            kids = [node.relation().cachedPlan()]
+        else:
+            kids = [node.children().apply(i) for i in range(node.children().size())]
+        for k in kids:
+            walk(k, below_rr)
+
+    walk(df._jdf.queryExecution().executedPlan(), False)
+    return out
+
+
+def test_minhash_pipelines_hash_each_document_set_once(spark):
+    """Each document set is hashed by ONE Arrow pass, and it runs after
+    the round-robin spread, on every core. A deterministic filter on the
+    UDF output is pushed below the exchange and re-runs the UDF in the
+    one-task scan stage; the exact verify joins the pinned grams instead
+    of re-hashing survivors with the md5 shingle UDF (``sh``). Covers the
+    pairs ``dedup_fuzzy`` runs by default, ``fuzzy_dedup_against`` and
+    ``containment_pairs`` (whose two sides are two document sets)."""
+    from traildb_spark.operators import dedup
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox number {i % 7} jumps over the lazy dog {i % 3}")
+         for i in range(40)],
+        ["doc_id", "text"],
+    )
+    new = spark.createDataFrame(
+        [(100 + i, f"the quick brown fox number {i} jumps over the lazy dog")
+         for i in range(5)],
+        ["doc_id", "text"],
+    )
+    cases = [
+        (lambda: dedup.minhash_lsh_pairs_portable(
+            docs, num_hashes=64, bands=16, threshold=0.7, max_bucket=64),
+         "grams_sig_udf(", 1),
+        (lambda: dedup.fuzzy_dedup_against(new, docs), "grams_sig_udf(", 2),
+        (lambda: dedup.containment_pairs(docs, docs), "sh(", 2),
+    ]
+    for build, udf, n_sets in cases:
+        spark.catalog.clearCache()  # before the build: the pins are the plan
+        evals = _python_evals(build())
+        assert not any(evals.values()), evals
+        assert sum(udf in k for k in evals) == n_sets, evals
+        assert len(evals) == n_sets, evals
+
+
 def test_set_jaccard_pairs_equi_join_no_cross_product(spark):
     """The pair stage must be the feature-keyed EQUI self-join — a
     cartesian/nested-loop plan would be the O(ids²) shape the feature

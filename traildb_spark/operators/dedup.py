@@ -347,22 +347,29 @@ def _portable_sig_pipeline(
     bands: int,
     with_sig: bool = False,
 ):
-    """Shared portable-MinHash front end: ONE Arrow pass computes md5
-    shingle hashes, the rotate-XOR signature AND the md5 band keys per
-    doc (signature+banding fused — the band keys are md5 over the same
-    in-memory signature matrix, value-identical to the former JVM
+    """Shared portable-MinHash front end and the ONE place a document set
+    is hashed: one Arrow pass computes the md5 shingle hashes, the
+    rotate-XOR signature AND the md5 band keys per doc (signature+banding
+    fused — the band keys are md5 over the same in-memory signature
+    matrix, value-identical to the former JVM
     ``md5(concat_ws(",", slice(sig, ...)))`` since every sig value is a
-    nonnegative decimal). Returns ``(raw, base, banded)`` where raw =
-    (id, __text), base = (id, n_grams[, sig], __bh) persisted + eagerly
-    populated, banded = (id, band, bh) via posexplode of the cached band
-    keys — zero post-pass hashing. ``with_sig`` keeps the full signature
-    on base for the sig-agreement prune; when the prune is inactive (the
-    default and every registry query — cutoff ≤ the per-band certainty
-    floor) the 16-long sig array never crosses the Python boundary and
-    never lands in cache. The gram arrays are born and die inside the
-    pass (array<long> columns cache ~4× worse than they compute, and at
-    scale an all-grams cache is a non-starter); exact-verify re-derives
-    grams from text for survivors only. Serves the self-join pipeline
+    nonnegative decimal). Returns ``(base, banded)``: base = (id, grams[,
+    sig], __bh) persisted, banded = (id, band, bh) via posexplode of the
+    cached band keys — zero post-pass hashing, and no gram arrays in the
+    band shuffle. ``grams`` (per-doc sorted distinct, the array
+    :func:`md5_shingle_hashes` gives) stays in the pin so the exact verify
+    and the ``grams/`` artifact join it instead of re-hashing text; it is
+    linear in text (~3.7 KB pinned per perfbench doc, 5.7× its
+    characters; MEMORY_AND_DISK spills). Every doc has at least one gram
+    (a doc shorter than k, even an empty or NULL one, is one whole-doc
+    window), so every doc gets bands and no row is filtered. Nothing here
+    filters or counts the pinned projection: a deterministic filter on a
+    UDF output is pushed below ``_spread``'s round-robin exchange and
+    re-runs the UDF in the one-task scan stage. ``with_sig`` keeps the
+    full signature on base for the sig-agreement prune; when the prune is
+    inactive (the default and every registry query — cutoff ≤ the
+    per-band certainty floor) the sig array never crosses the Python
+    boundary and never lands in cache. Serves the self-join pipeline
     (``minhash_lsh_pairs_portable``), the cross-corpus incremental path
     (``fuzzy_dedup_against``), and the persisted signature artifact
     (``save_minhash_index`` — banded schema unchanged, so existing
@@ -377,9 +384,9 @@ def _portable_sig_pipeline(
     from ..functions.vectorized import _pynorm
 
     out_type = (
-        "struct<n_grams: int, sig: array<long>, bh: array<string>>"
+        "struct<grams: array<long>, sig: array<long>, bh: array<string>>"
         if with_sig
-        else "struct<n_grams: int, bh: array<string>>"
+        else "struct<grams: array<long>, bh: array<string>>"
     )
 
     @F.pandas_udf(out_type)
@@ -424,34 +431,25 @@ def _portable_sig_pipeline(
         else:
             bhs = []
             sigs = []
-        data = {
-            "n_grams": np.fromiter(
-                (len(g) for g in gs), dtype=np.int64, count=nd
-            )
-        }
+        data = {"grams": gs}
         if with_sig:
             data["sig"] = sigs
         data["bh"] = bhs
         return pd.DataFrame(data)
 
-    raw = _spread(df).select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-    cols = ["id", F.col("gs.n_grams").alias("n_grams")]
+    cols = ["id", F.col("gs.grams").alias("grams")]
     if with_sig:
         cols.append(F.col("gs.sig").alias("sig"))
     cols.append(F.col("gs.bh").alias("__bh"))
     base = _materialize(
-        raw.select("id", grams_sig_udf(F.col("__text")).alias("gs"))
+        _spread(df)
+        .select(F.col(id_col).alias("id"), grams_sig_udf(F.col(text_col)).alias("gs"))
         .select(*cols)
-        .filter(F.col("n_grams") > 0)
     )
-    # populate the cache distributed NOW: otherwise AQE's broadcast-build
-    # for the verify joins recomputes the (expensive) hash pipeline
-    # single-threaded before the main stage fills the cache
-    base.count()
     banded = base.select(
         "id", F.posexplode("__bh").alias("band", "bh")
     ).select("id", "band", "bh")
-    return raw, base, banded
+    return base, banded
 
 
 def _cap_band_buckets(banded: DataFrame, max_bucket) -> DataFrame:
@@ -486,6 +484,40 @@ def _sig_min_agree(threshold: float, num_hashes: int) -> int:
     )
 
 
+def _exact_jaccard(
+    cand: DataFrame, a_col: str, b_col: str, grams_a: DataFrame,
+    grams_b: DataFrame, threshold: float,
+) -> DataFrame:
+    """Exact verify of LSH candidates: join each side's (id, grams) table
+    (a pipeline ``base`` or a ``grams/`` artifact) and keep the pairs
+    with Jaccard ≥ threshold, rounded to 6 places as the oracles do."""
+    inter = F.size(F.array_intersect("grams_a", "grams_b")).cast("double")
+    # |A ∪ B| = |A| + |B| − |A ∩ B|: both gram arrays are per-doc DISTINCT
+    # by construction (md5_shingle_hashes sorts + dedups), so the union
+    # size is pure arithmetic — array_union would materialize a fresh
+    # array per candidate pair only to take its length
+    union = (F.size("grams_a") + F.size("grams_b")).cast("double") - inter
+    return (
+        cand.join(grams_a.select(F.col("id").alias(a_col),
+                                 F.col("grams").alias("grams_a")), a_col)
+        .join(grams_b.select(F.col("id").alias(b_col),
+                             F.col("grams").alias("grams_b")), b_col)
+        .withColumn("jaccard", F.round(inter / union, 6))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _best_match(pairs: DataFrame) -> DataFrame:
+    """One row per new doc: its max-Jaccard corpus match, ties → the
+    smallest corpus id."""
+    w = Window.partitionBy("new_id").orderBy(F.desc("jaccard"), F.asc("corpus_id"))
+    return (
+        pairs.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select("new_id", "corpus_id", "jaccard")
+    )
+
+
 def minhash_lsh_pairs_portable(
     df: DataFrame,
     text_col: str = "text",
@@ -507,14 +539,17 @@ def minhash_lsh_pairs_portable(
     ``pair_filter``: optional predicate builder ``(id_a: Column, id_b:
     Column) -> Column`` applied to CANDIDATES before the exact-verify
     stage — for id-deterministic gates (audit sampling, shard routing)
-    this skips the gram recompute + set-intersection on filtered-out
-    pairs entirely. Semantics identical to filtering the output, since
-    the gate may only read the ids.
+    this skips the gram join + set-intersection on filtered-out pairs
+    entirely. Semantics identical to filtering the output, since the gate
+    may only read the ids.
+
+    Each doc is hashed once (:func:`_portable_sig_pipeline`): the exact
+    verify joins the candidates to the pinned ``base`` grams.
     """
     rows = num_hashes // bands
     min_agree = _sig_min_agree(threshold, num_hashes)
     prune_active = sig_prune and min_agree > rows
-    raw, base, banded = _portable_sig_pipeline(
+    base, banded = _portable_sig_pipeline(
         df, text_col, id_col, shingle_k, num_hashes, bands,
         with_sig=prune_active,
     )
@@ -527,7 +562,6 @@ def minhash_lsh_pairs_portable(
         # the cap window exists; the uncapped posexplode is a narrow
         # cache read already.
         banded = _materialize(banded)
-        banded.count()
     a = banded.select(F.col("id").alias("id_a"), "band", "bh")
     b = banded.select(F.col("id").alias("id_b"), "band", "bh")
     cand = (
@@ -567,33 +601,9 @@ def minhash_lsh_pairs_portable(
         )
     if pair_filter is not None:
         cand = cand.filter(pair_filter(F.col("id_a"), F.col("id_b")))
-    # exact verify: md5 shingle sets recomputed from text for surviving
-    # ids only (bounded), never cached corpus-wide
-    cand = _materialize(cand)
-    ids = (
-        cand.select(F.col("id_a").alias("id"))
-        .union(cand.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    surv = _materialize(
-        raw.join(ids, "id", "left_semi").select(
-            "id", md5_shingle_hashes(F.col("__text"), shingle_k).alias("grams")
-        )
-    )
-    ga = surv.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = surv.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b"))
-    inter = F.size(F.array_intersect("grams_a", "grams_b")).cast("double")
-    # |A ∪ B| = |A| + |B| − |A ∩ B|: both gram arrays are per-doc DISTINCT
-    # by construction (md5_shingle_hashes sorts + dedups), so the union
-    # size is pure arithmetic — array_union would materialize a fresh
-    # array per candidate pair only to take its length
-    union = (F.size("grams_a") + F.size("grams_b")).cast("double") - inter
-    return (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    grams = base.select("id", "grams")
+    return _exact_jaccard(cand, "id_a", "id_b", grams, grams, threshold).select(
+        "id_a", "id_b", "jaccard"
     )
 
 
@@ -623,18 +633,18 @@ def fuzzy_dedup_against(
     oracle (q116). Scale shape: candidates come from the (band, bh)
     equi-join of the two banded signature tables — bands×|new| vs
     bands×|corpus| key-shuffled rows, never a cross product; AQE
-    broadcasts the new side when it is small (the common case); the
-    exact verify recomputes gram sets only for surviving ids on each
-    side.
+    broadcasts the new side when it is small (the common case). Each
+    side is hashed once (:func:`_portable_sig_pipeline`); the exact
+    verify joins the candidates to each side's pinned ``base`` grams.
     """
     rows = num_hashes // bands
     min_agree = _sig_min_agree(threshold, num_hashes)
     prune_active = sig_prune and min_agree > rows
-    raw_n, base_n, banded_n = _portable_sig_pipeline(
+    base_n, banded_n = _portable_sig_pipeline(
         new_df, text_col, id_col, shingle_k, num_hashes, bands,
         with_sig=prune_active,
     )
-    raw_c, base_c, banded_c = _portable_sig_pipeline(
+    base_c, banded_c = _portable_sig_pipeline(
         corpus_df, text_col, id_col, shingle_k, num_hashes, bands,
         with_sig=prune_active,
     )
@@ -661,39 +671,10 @@ def fuzzy_dedup_against(
             .filter(agree >= F.lit(min_agree))
             .select("new_id", "corpus_id")
         )
-    cand = _materialize(cand)
-    ids_n = cand.select(F.col("new_id").alias("id")).distinct()
-    ids_c = cand.select(F.col("corpus_id").alias("id")).distinct()
-    ga = _materialize(
-        raw_n.join(ids_n, "id", "left_semi").select(
-            F.col("id").alias("new_id"),
-            md5_shingle_hashes(F.col("__text"), shingle_k).alias("grams_a"),
-        )
-    )
-    gb = _materialize(
-        raw_c.join(ids_c, "id", "left_semi").select(
-            F.col("id").alias("corpus_id"),
-            md5_shingle_hashes(F.col("__text"), shingle_k).alias("grams_b"),
-        )
-    )
-    inter = F.size(F.array_intersect("grams_a", "grams_b")).cast("double")
-    # |A ∪ B| = |A| + |B| − |A ∩ B|: both gram arrays are per-doc DISTINCT
-    # by construction (md5_shingle_hashes sorts + dedups), so the union
-    # size is pure arithmetic — array_union would materialize a fresh
-    # array per candidate pair only to take its length
-    union = (F.size("grams_a") + F.size("grams_b")).cast("double") - inter
-    pairs = (
-        cand.join(ga, "new_id")
-        .join(gb, "corpus_id")
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    w = Window.partitionBy("new_id").orderBy(F.desc("jaccard"), F.asc("corpus_id"))
-    return (
-        pairs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("new_id", "corpus_id", "jaccard")
-    )
+    return _best_match(_exact_jaccard(
+        cand, "new_id", "corpus_id", base_n.select("id", "grams"),
+        base_c.select("id", "grams"), threshold,
+    ))
 
 
 MINHASH_META_FILE = "_minhash_meta.json"
@@ -713,7 +694,9 @@ def save_minhash_index(
     WITHOUT re-shingling it: ``bands/`` holds the (id, band, bh) banded
     signature table (the candidate-join side), ``grams/`` the md5
     shingle sets (the exact-verify side; linear in corpus text, the
-    price of exact verification without the original text). Parameters
+    price of exact verification without the original text). Both are
+    written from one :func:`_portable_sig_pipeline` pass, so the corpus
+    is hashed once. Parameters
     and a data fingerprint land in a JSON sidecar through the Hadoop FS
     API — same posture as the z-index and IVF artifacts (reference
     index↔data checksum analog, `tdbcli/tdb_index.c:439-451`).
@@ -723,13 +706,11 @@ def save_minhash_index(
     from .. import fsutil
 
     spark = corpus_df.sparkSession
-    raw, base, banded = _portable_sig_pipeline(
+    base, banded = _portable_sig_pipeline(
         corpus_df, text_col, id_col, shingle_k, num_hashes, bands
     )
     banded.write.mode("overwrite").parquet(f"{path}/bands")
-    raw.select(
-        "id", md5_shingle_hashes(F.col("__text"), shingle_k).alias("grams")
-    ).write.mode("overwrite").parquet(f"{path}/grams")
+    base.select("id", "grams").write.mode("overwrite").parquet(f"{path}/grams")
     base.unpersist()
     fp = {
         "bands": fsutil.data_fingerprint(spark, f"{path}/bands"),
@@ -810,14 +791,12 @@ def append_minhash_index(
                 "the sidecar was written — rebuild with save_minhash_index"
             )
     shingle_k = int(meta["shingle_k"])
-    raw, base, banded = _portable_sig_pipeline(
+    base, banded = _portable_sig_pipeline(
         new_corpus_rows, text_col, id_col, shingle_k,
         int(meta["num_hashes"]), int(meta["bands"])
     )
     banded.write.mode("append").parquet(bands_p)
-    raw.select(
-        "id", md5_shingle_hashes(F.col("__text"), shingle_k).alias("grams")
-    ).write.mode("append").parquet(grams_p)
+    base.select("id", "grams").write.mode("append").parquet(grams_p)
     base.unpersist()
     meta["data_fingerprint"] = {
         "bands": fsutil.data_fingerprint(spark, bands_p),
@@ -943,7 +922,7 @@ def fuzzy_dedup_against_prebuilt(
     num_hashes = int(meta["num_hashes"])
     bands = int(meta["bands"])
 
-    raw_n, _base_n, banded_n = _portable_sig_pipeline(
+    base_n, banded_n = _portable_sig_pipeline(
         new_df, text_col, id_col, shingle_k, num_hashes, bands
     )
     banded_c = spark.read.parquet(bands_p)
@@ -956,36 +935,12 @@ def fuzzy_dedup_against_prebuilt(
         .dropDuplicates(["new_id", "corpus_id"])
     )
     cand = _materialize(cand)
-    ids_n = cand.select(F.col("new_id").alias("id")).distinct()
-    ga = _materialize(
-        raw_n.join(ids_n, "id", "left_semi").select(
-            F.col("id").alias("new_id"),
-            md5_shingle_hashes(F.col("__text"), shingle_k).alias("grams_a"),
-        )
+    gb = spark.read.parquet(grams_p).join(
+        cand.select(F.col("corpus_id").alias("id")).distinct(), "id", "left_semi"
     )
-    gb = (
-        spark.read.parquet(grams_p)
-        .join(cand.select(F.col("corpus_id").alias("id")).distinct(), "id", "left_semi")
-        .select(F.col("id").alias("corpus_id"), F.col("grams").alias("grams_b"))
-    )
-    inter = F.size(F.array_intersect("grams_a", "grams_b")).cast("double")
-    # |A ∪ B| = |A| + |B| − |A ∩ B|: both gram arrays are per-doc DISTINCT
-    # by construction (md5_shingle_hashes sorts + dedups), so the union
-    # size is pure arithmetic — array_union would materialize a fresh
-    # array per candidate pair only to take its length
-    union = (F.size("grams_a") + F.size("grams_b")).cast("double") - inter
-    pairs = (
-        cand.join(ga, "new_id")
-        .join(gb, "corpus_id")
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    w = Window.partitionBy("new_id").orderBy(F.desc("jaccard"), F.asc("corpus_id"))
-    return (
-        pairs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("new_id", "corpus_id", "jaccard")
-    )
+    return _best_match(_exact_jaccard(
+        cand, "new_id", "corpus_id", base_n.select("id", "grams"), gb, threshold
+    ))
 
 
 # --------------------------------------------------------------------------
@@ -1138,8 +1093,11 @@ def connected_components(
 
     Hybrid strategy: the EDGE list of a dedup job is orders of magnitude
     smaller than the corpus, so when it fits the driver comfortably
-    (<= driver_threshold edges) union-find runs there exactly — one collect
-    of (src,dst) longs, no iteration overhead. Above the threshold, runs
+    (<= driver_threshold edges) union-find runs there exactly — one
+    bounded collect of at most driver_threshold + 1 (src,dst) rows both
+    decides the route and feeds it, no iteration overhead. Above the
+    threshold the edge set is pinned (its rounds read it repeatedly) and
+    the call runs
     the distributed large-star/small-star alternation (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14): each round
     is two groupBy-min + join passes over the edge set, and the edge set
@@ -1153,13 +1111,11 @@ def connected_components(
     reached); the default 64 covers the O(log n) contraction of any
     node-id space that fits in int64.
     """
-    edges = _materialize(
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).filter(
-            F.col("src") != F.col("dst")
-        ).dropDuplicates()
-    )
-    n_edges = edges.count()
-    if n_edges <= driver_threshold:
+    edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).filter(
+        F.col("src") != F.col("dst")
+    ).dropDuplicates()
+    rows = edges.limit(driver_threshold + 1).collect()
+    if len(rows) <= driver_threshold:
         parent: dict = {}
 
         def find(x):
@@ -1170,7 +1126,6 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        rows = edges.collect()
         for r in rows:
             ra, rb = find(r["src"]), find(r["dst"])
             if ra != rb:
@@ -1179,7 +1134,6 @@ def connected_components(
                 parent[hi] = lo
         nodes = {x for r in rows for x in (r["src"], r["dst"])}
         out = [(x, find(x)) for x in sorted(nodes)]
-        edges.unpersist()
         # schema follows the input id type (string doc ids are legal and
         # the distributed path below handles them — the fast path must
         # not flip behavior on data volume)
@@ -1189,6 +1143,7 @@ def connected_components(
         )
 
     # distributed path: large-star/small-star alternation
+    edges = _materialize(edges)
     nodes = _materialize(
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
@@ -1525,10 +1480,9 @@ def _portable_srp_banded(
             "id", F.col("qc.qv").alias("qv"), F.col("qc.code").alias("code")
         )
     )
-    # populate the cache distributed NOW (same rationale as the text
-    # pipeline): otherwise AQE's broadcast-build for the verify joins
-    # recomputes the Arrow pass single-threaded before the candidate
-    # stage fills the cache
+    # populate the cache distributed NOW: otherwise AQE's broadcast-build
+    # for the verify joins recomputes the Arrow pass single-threaded
+    # before the candidate stage fills the cache
     base.count()
     banded = base.select(
         "id",
@@ -2397,9 +2351,10 @@ def containment_pairs(
     sort last, leaving prefixes keyed on rare grams — the PPJoin skew
     story applied to the asymmetric join. The super side explodes its
     full distinct gram set (the inverted-index side — `q85`'s artifact
-    shape); exact verify recomputes |A∩B|/|A| on semi-joined survivors
-    only. Portable md5-60 shingles throughout, so the DuckDB oracle
-    runs brute-force and output identity proves candidate completeness.
+    shape); exact verify computes |A∩B|/|A| from the same pinned gram
+    arrays, so each side is hashed once. Portable md5-60 shingles
+    throughout, so the DuckDB oracle runs brute-force and output
+    identity proves candidate completeness.
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError(
@@ -2407,19 +2362,21 @@ def containment_pairs(
         )
     if k < 1:
         raise ValueError(f"containment_pairs: k must be >= 1, got {k}")
+    # every doc has at least one gram (a doc shorter than k is one
+    # whole-doc window), so neither side filters: a filter on the UDF
+    # output would be pushed below the round-robin exchange and run the
+    # md5 UDF a second time, in the one-task scan stage
     a = _materialize(
         _spread(sub_df).select(
             F.col(id_col).alias("sub_id"),
-            F.col(text_col).alias("__text"),
             md5_shingle_hashes(F.col(text_col), k).alias("ga"),
-        ).withColumn("sz", F.size("ga")).filter(F.col("sz") > 0)
+        ).withColumn("sz", F.size("ga"))
     )
     b = _materialize(
         _spread(super_df).select(
             F.col(id_col).alias("super_id"),
-            F.col(text_col).alias("__textb"),
             md5_shingle_hashes(F.col(text_col), k).alias("gb"),
-        ).filter(F.size("gb") > 0)
+        )
     )
     bp = b.select("super_id", F.explode("gb").alias("g"))
     bdf = bp.groupBy("g").agg(F.count(F.lit(1)).alias("dfc"))
