@@ -649,7 +649,10 @@ def _png_fixture_payload():
 # v2: VP8L sub-images now carry the spec's per-image color-cache-info bit
 # (RFC 9649 §5) and RIFF chunk sizes exclude the pad byte — WebP payloads
 # encoded by v1 are one flag bit short per transform sub-image.
-_MEDIA_CACHE_VERSION = "3"
+# v4: index sidecars record each live subdir's fingerprint as
+# <sub>_fingerprint (an earlier MinHash sidecar is refused as stale) and
+# the z-index lives in a _zindex/_g<N> generation.
+_MEDIA_CACHE_VERSION = "4"
 
 
 def _media_table(spark, sf_dir, target_kind, payload_udf, cache_name=None):

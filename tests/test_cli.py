@@ -97,7 +97,7 @@ def test_cli_index_roundtrip(spark, tmp_path, capsys):
     assert "_zindex" in capsys.readouterr().out
     with open(os.path.join(db, "_traildb_meta.json")) as fh:
         meta = _json.load(fh)
-    assert meta["zindex"]["path"] == "_zindex"
+    assert meta["zindex"]["path"] == "_zindex/_g1"
     assert meta["zindex"]["columns"] == ["action"]
     assert len(meta["zindex"]["data_fingerprint"]) == 32  # stale guard
 

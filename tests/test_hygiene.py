@@ -80,3 +80,31 @@ def test_every_vectorized_kernel_has_a_caller():
     ]
     assert defs
     assert sorted(set(defs) - used) == []
+
+
+def test_one_commit_protocol_for_artifacts():
+    """The indexes beside the data verify, commit and sweep through the
+    ``fsutil`` artifact helpers: only ``fsutil.py`` and ``dataset.py``
+    (the z-index's primary-data guard) call ``data_fingerprint``, and no
+    module but ``fsutil.py`` carries a ``_g<N>`` generation regex."""
+    import ast
+    import re
+    from pathlib import Path
+
+    pkg = Path(traildb_spark.__file__).resolve().parent
+    callers, regexes = set(), set()
+    for path in pkg.rglob("*.py"):
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(
+                    fn, "id", None)
+                if name == "data_fingerprint":
+                    callers.add(rel)
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if re.search(r"_g\(?\\d", node.value):
+                    regexes.add(rel)
+    assert "dataset.py" in callers
+    assert callers <= {"fsutil.py", "dataset.py"}, sorted(callers)
+    assert regexes == {"fsutil.py"}, sorted(regexes)

@@ -12,10 +12,11 @@ Differences, by design:
   take directories;
 - ``dump`` writes a dataset by default; ``-o -`` streams rows to stdout for
   interactive use (driver-side collect — bounded by --limit);
-- ``index`` builds a z-ordered auxiliary copy under ``<db>/_zindex`` and
-  registers it in the sidecar: the finalize() layout already prunes on
-  uuid/time, so the optional index targets CNF filters over OTHER columns
-  — the same role as the reference's optional inverted-index artifact
+- ``index`` builds a z-ordered auxiliary copy in a new generation
+  ``<db>/_zindex/_g<N>`` and commits it by registering it in the sidecar
+  (the previous generation serves until then): the finalize() layout
+  already prunes on uuid/time, so the optional index targets CNF filters
+  over OTHER columns — the same role as the reference's optional inverted-index artifact
   (SURVEY §2.8 X1-X3); ``dump --no-index`` opts out.
 """
 
@@ -286,9 +287,11 @@ def cmd_info(args) -> int:
 def cmd_index(args) -> int:
     """Reference ``tdb index`` (`tdbcli/tdb_index.c:721-779`): build the
     optional auxiliary index artifact. The primary finalize() layout already
-    prunes on uuid/time; this adds a z-ordered copy registered in the
-    sidecar so CNF filters over ``--columns`` prune row groups on all of
-    them at once (auto-discovered by ``open``, opt-out ``--no-index``)."""
+    prunes on uuid/time; this adds a z-ordered copy under
+    ``<db>/_zindex/_g<N>``, committed by registering it in the sidecar, so
+    CNF filters over ``--columns`` prune row groups on all of them at once
+    (auto-discovered by ``open``, opt-out ``--no-index``). A rebuild
+    writes the next generation and sweeps the old one after the commit."""
     from .dataset import TrailDataset
 
     spark = _spark()

@@ -129,12 +129,14 @@ def update_meta(spark: SparkSession, path: str, **entries) -> None:
     """Set ``entries`` in the dataset's ``_traildb_meta.json`` sidecar and
     keep every other key, so an append does not drop the z-index entry
     that ``build_index`` recorded (``open`` then sees the index as stale
-    and warns, instead of losing it without a word)."""
+    and warns, instead of losing it without a word). The write is an
+    atomic rename (``fsutil.swap_pointer``): a failed write leaves the
+    previous sidecar whole."""
     meta_path = f"{path}/{META_FILE}"
     raw = fsutil.read_small(spark, meta_path)
     meta = json.loads(raw) if raw is not None else {}
     meta.update(entries)
-    fsutil.write_small(spark, meta_path, json.dumps(meta))
+    fsutil.swap_pointer(spark, meta_path, json.dumps(meta))
 
 
 @dataclass
@@ -711,20 +713,26 @@ class TrailDataset:
         optional auxiliary index artifact for an existing finalized dataset
         and register it for auto-discovery.
 
-        Writes a z-ordered copy of the dataset under ``<db>/_zindex``
-        (the underscore prefix keeps it invisible to the primary scan,
-        like the reference's separate ``<db>/index`` file) and records
-        ``{"zindex": {"path": "_zindex", "columns": [...]}}`` in the
-        ``_traildb_meta.json`` sidecar so ``open()`` discovers it
+        Writes a z-ordered copy of the dataset to a new generation
+        directory ``<db>/_zindex/_g<N>`` (the underscore prefixes keep
+        it invisible to the primary scan, like the reference's separate
+        ``<db>/index`` file) and records
+        ``{"zindex": {"path": "_zindex/_g<N>", "columns": [...]}}`` in
+        the ``_traildb_meta.json`` sidecar so ``open()`` discovers it
         (reference auto-discovery, `tdbcli/tdb_index.c:637-662`) and the
-        ``df`` router sends covered CNF filters to it. Returns the index
-        path. Rebuilding overwrites the previous index.
+        ``df`` router sends covered CNF filters to it. The sidecar write
+        is the commit, as in ``fsutil.load_artifact``: a crash before it
+        leaves the previous index serving, and only after it are the
+        superseded generations (and a legacy flat ``_zindex``) swept.
+        Returns the index path.
         """
         ds = TrailDataset.open(spark, db_path, use_index=False)
         missing = [c for c in cols if c not in ds._raw.columns]
         if missing:
             raise ValueError(f"index columns not in schema: {missing}")
-        zpath = f"{db_path}/{ZINDEX_DIR}"
+        root = f"{db_path}/{ZINDEX_DIR}"
+        gen = f"_g{fsutil.next_generation(spark, root)}"
+        zpath = f"{root}/{gen}"
         ds.save_zordered(
             zpath,
             cols,
@@ -736,13 +744,14 @@ class TrailDataset:
             spark,
             db_path,
             zindex={
-                "path": ZINDEX_DIR,
+                "path": f"{ZINDEX_DIR}/{gen}",
                 "columns": list(cols),
                 # ties the index to THIS data: open() drops the index when
                 # the primary's files change (stale-index guard)
                 "data_fingerprint": fsutil.data_fingerprint(spark, db_path),
             },
         )
+        fsutil.sweep_generations(spark, root, {gen})
         return zpath
 
 

@@ -7,7 +7,9 @@ silently degrade off the local filesystem (a sidecar read through
 ``open()`` returns FileNotFound on hdfs:// and index auto-discovery just
 never happens). Every helper here goes through the JVM's Hadoop
 FileSystem for the path's own scheme, so the SAME code path serves local
-runs, tests, and object-store deployments.
+runs, tests, and object-store deployments. The indexes written beside
+the data (MinHash, IVF, SQ8, JL-SQ8) load, commit and compact through
+one protocol here, described at :func:`load_artifact`.
 
 py4j caveat that shapes the API: byte[] arguments/returns are passed BY
 VALUE, so a Java ``readFully(buf)`` never mutates a Python-held array —
@@ -17,7 +19,10 @@ with hadoop-common).
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
+import json
+import re
+from typing import Callable, Iterator
 
 
 def hfs(spark, path: str):
@@ -49,7 +54,10 @@ def read_small(spark, path: str) -> str | None:
 
 
 def write_small(spark, path: str, content: str) -> None:
-    """Overwrite a small UTF-8 file through the FS API."""
+    """Overwrite a small UTF-8 file through the FS API. ``create``
+    truncates the live file first, so a failed write leaves it empty:
+    anything a reader must always find whole goes through
+    :func:`swap_pointer` instead."""
     _, hpath, fs = hfs(spark, path)
     out = fs.create(hpath(path), True)
     try:
@@ -81,23 +89,27 @@ def swap_pointer(spark, latest: str, content: str) -> None:
     fctx.rename(tmp, hpath(latest), opts)
 
 
+def _digest(entries) -> str:
+    """md5 over the sorted (relative path, size, modification-time ms)
+    entries — the one consistency token format."""
+    h = hashlib.md5()
+    for rel, size, mtime in sorted(entries):
+        h.update(f"{rel}:{size}:{mtime};".encode("utf-8"))
+    return h.hexdigest()
+
+
 def data_fingerprint(spark, path: str) -> str:
     """Cheap metadata fingerprint of a dataset's PRIMARY data files:
     md5 over the sorted (relative path, size, modification-time ms) list
     from :func:`list_data_files`. The shared consistency token tying an
-    auxiliary artifact (z-index, persisted IVF cells) to the data it was
-    built from — the analog of the reference's index↔data checksum
+    auxiliary artifact (z-index, persisted index subdirs) to the data it
+    was built from — the analog of the reference's index↔data checksum
     (`tdbcli/tdb_index.c:439-451`). mtime closes the same-name/same-size
     rewrite hole; the false-stale direction (a copy without preserved
     mtimes) only invalidates the artifact, never correctness. Goes
     through the Hadoop FS API so build-time and open-time fingerprints
     agree on any filesystem, not just file://."""
-    import hashlib
-
-    h = hashlib.md5()
-    for rel, size, mtime in sorted(list_data_files(spark, path)):
-        h.update(f"{rel}:{size}:{mtime};".encode("utf-8"))
-    return h.hexdigest()
+    return _digest(list_data_files(spark, path))
 
 
 def list_data_files(spark, path: str) -> Iterator[tuple[str, int, int]]:
@@ -143,3 +155,157 @@ def list_data_files(spark, path: str) -> Iterator[tuple[str, int, int]]:
         ):
             continue
         yield rel, int(size), int(mtime)
+
+
+# -- artifacts beside the data -------------------------------------------
+
+def _live_files(spark, path: str, meta: dict, subs) -> dict[str, list]:
+    """Data files of each live subdir of the artifact at ``path``, keyed
+    by ``sub``, from ONE :func:`list_data_files` pass over the root. The
+    entries are relative to the subdir, so each digest equals
+    ``data_fingerprint`` of that subdir alone."""
+    live = {sub: meta.get(f"{sub}_dir", sub) for sub in subs}
+    by_dir: dict[str, list] = {d: [] for d in live.values()}
+    for rel, size, mtime in list_data_files(spark, path):
+        head, _, tail = rel.partition("/")
+        if head in by_dir:
+            by_dir[head].append((tail, size, mtime))
+    return {sub: by_dir[d] for sub, d in live.items()}
+
+
+def _verified(spark, path: str, meta_file: str, subs, builder: str,
+              kinds=None) -> tuple[dict, dict[str, str], int]:
+    """:func:`load_artifact`'s body; also returns the live file count."""
+    raw = read_small(spark, f"{path}/{meta_file}")
+    if raw is None:
+        raise FileNotFoundError(
+            f"no index sidecar at {path}/{meta_file}; build one with {builder}"
+        )
+    meta = json.loads(raw)
+    if kinds is not None and meta.get("kind") not in kinds:
+        raise ValueError(
+            f"index at {path} is kind={meta.get('kind')!r}, not "
+            f"{' or '.join(kinds)} — this call reads a {builder} artifact"
+        )
+    files = _live_files(spark, path, meta, subs)
+    for sub, entries in files.items():
+        want = meta.get(f"{sub}_fingerprint")
+        if want is None or want != _digest(entries):
+            raise ValueError(
+                f"index at {path} is stale: its {sub} files changed since "
+                "the sidecar was written, or the sidecar records no "
+                f"fingerprint for them — rebuild with {builder}"
+            )
+    live = {sub: f"{path}/{meta.get(f'{sub}_dir', sub)}" for sub in subs}
+    return meta, live, sum(len(e) for e in files.values())
+
+
+def load_artifact(spark, path: str, meta_file: str, subs, builder: str,
+                  kinds=None) -> tuple[dict, dict[str, str]]:
+    """Open an index artifact written beside the data — the ONE commit
+    protocol every persisted index (MinHash, IVF, SQ8, JL-SQ8) follows,
+    the analog of the reference's index↔data checksum
+    (`tdbcli/tdb_index.c:439-451`).
+
+    Layout: ``<path>/<meta_file>`` is a JSON sidecar and the artifact's
+    only pointer. Each subdir ``sub`` in ``subs`` is read from
+    ``<path>/<meta[sub_dir]>`` (default ``<path>/<sub>``), and
+    ``meta[sub_fingerprint]`` is the digest of that dir's data files.
+    ``kind``, ``compactions`` and ``appends`` are the writers' own keys.
+
+    Writes follow one order: data files first, then
+    :func:`commit_artifact` (re-fingerprint, atomic sidecar rename) as
+    the LAST step of every save, append and compaction, then
+    :func:`sweep_generations`. A crash before the rename leaves either
+    the previous sidecar over untouched dirs (the previous answer) or
+    fingerprints that no longer match; a crash after it leaves orphans
+    no reader resolves.
+
+    Reading checks, in order: the sidecar exists (else
+    ``FileNotFoundError`` naming ``builder``); its ``kind`` is in
+    ``kinds`` when given; and every live subdir's fingerprint is
+    recorded and current (else ``ValueError`` "stale"). There is no
+    primary to fall back to, so an artifact that fails a check is
+    refused, never partly served. Returns (meta, {sub: live path})."""
+    meta, live, _ = _verified(spark, path, meta_file, subs, builder, kinds)
+    return meta, live
+
+
+def commit_artifact(spark, path: str, meta_file: str, subs,
+                    meta: dict) -> int:
+    """Record each live subdir's fingerprint in ``meta`` and write the
+    sidecar through :func:`swap_pointer` — the rename is the commit of
+    the :func:`load_artifact` protocol. Returns the live data files."""
+    files = _live_files(spark, path, meta, subs)
+    for sub, entries in files.items():
+        meta[f"{sub}_fingerprint"] = _digest(entries)
+    swap_pointer(spark, f"{path}/{meta_file}", json.dumps(meta))
+    return sum(len(e) for e in files.values())
+
+
+def next_generation(spark, root: str, subs=("",)) -> int:
+    """One past the highest ``<sub>_g<N>`` child of ``root`` for any
+    ``sub`` in ``subs``, live or orphaned, so a new generation never
+    lands in a dir an earlier crashed write left behind."""
+    _, hpath, fs = hfs(spark, root)
+    p = hpath(root)
+    pat = re.compile("(?:%s)_g(\\d+)" % "|".join(map(re.escape, subs)))
+    gens = [
+        int(m.group(1))
+        for st in (fs.listStatus(p) if fs.exists(p) else [])
+        if (m := pat.fullmatch(st.getPath().getName()))
+    ]
+    return max(gens, default=0) + 1
+
+
+def sweep_generations(spark, root: str, live: set[str], subs=None) -> None:
+    """Delete what a commit superseded under ``root``: each child named
+    ``<sub>`` or ``<sub>_g<N>`` for a ``sub`` in ``subs`` (every child
+    when ``subs`` is None) whose name is not in ``live``. Orphans of a
+    crashed write go the same way."""
+    _, hpath, fs = hfs(spark, root)
+    p = hpath(root)
+    if not fs.exists(p):
+        return
+    pat = None if subs is None else re.compile(
+        "(?:%s)(?:_g\\d+)?" % "|".join(map(re.escape, subs)))
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        if name not in live and (pat is None or pat.fullmatch(name)):
+            fs.delete(st.getPath(), True)
+
+
+def compact_artifact(
+    spark,
+    path: str,
+    meta_file: str,
+    relayout: dict[str, Callable],
+    builder: str,
+    rows_sub: str,
+    rows_per_file: int,
+    kinds=None,
+) -> int:
+    """Re-lay-out every subdir of a :func:`load_artifact` artifact into a
+    new generation: refuse a stale artifact (compacting unverified bytes
+    would bless them under fresh fingerprints), count ``rows_sub``'s
+    rows, pick the width, write ``<sub>_g<N>`` through
+    ``relayout[sub](df, parts)``, commit, then sweep the superseded and
+    orphaned generations. The width is bounded-size files at scale
+    (``rows_per_file``), floored at the cluster's parallelism so a small
+    artifact keeps enough splits for its probe scans. Returns the number
+    of data files compacted away."""
+    subs = tuple(relayout)
+    meta, live, files_before = _verified(
+        spark, path, meta_file, subs, builder, kinds)
+    n = spark.read.parquet(live[rows_sub]).count()
+    parts = max(1, -(-n // rows_per_file),
+                min(spark.sparkContext.defaultParallelism, -(-n // 10_000)))
+    gen = next_generation(spark, path, subs)
+    for sub, fn in relayout.items():
+        fn(spark.read.parquet(live[sub]), parts).write.mode(
+            "overwrite").parquet(f"{path}/{sub}_g{gen}")
+        meta[f"{sub}_dir"] = f"{sub}_g{gen}"
+    meta["compactions"] = int(meta.get("compactions", 0)) + 1
+    files_after = commit_artifact(spark, path, meta_file, subs, meta)
+    sweep_generations(spark, path, {meta[f"{s}_dir"] for s in subs}, subs)
+    return files_before - files_after

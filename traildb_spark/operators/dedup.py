@@ -678,6 +678,7 @@ def fuzzy_dedup_against(
 
 
 MINHASH_META_FILE = "_minhash_meta.json"
+_MH_SUBS = ("bands", "grams")
 
 
 def save_minhash_index(
@@ -696,49 +697,34 @@ def save_minhash_index(
     shingle sets (the exact-verify side; linear in corpus text, the
     price of exact verification without the original text). Both are
     written from one :func:`_portable_sig_pipeline` pass, so the corpus
-    is hashed once. Parameters
-    and a data fingerprint land in a JSON sidecar through the Hadoop FS
-    API — same posture as the z-index and IVF artifacts (reference
-    index↔data checksum analog, `tdbcli/tdb_index.c:439-451`).
+    is hashed once. Parameters and fingerprints land in the sidecar of
+    the :func:`fsutil.load_artifact` protocol.
     """
-    import json
-
     from .. import fsutil
 
-    spark = corpus_df.sparkSession
     base, banded = _portable_sig_pipeline(
         corpus_df, text_col, id_col, shingle_k, num_hashes, bands
     )
     banded.write.mode("overwrite").parquet(f"{path}/bands")
     base.select("id", "grams").write.mode("overwrite").parquet(f"{path}/grams")
     base.unpersist()
-    fp = {
-        "bands": fsutil.data_fingerprint(spark, f"{path}/bands"),
-        "grams": fsutil.data_fingerprint(spark, f"{path}/grams"),
-    }
-    fsutil.write_small(
-        spark,
-        f"{path}/{MINHASH_META_FILE}",
-        json.dumps(
-            {
-                "shingle_k": shingle_k,
-                "num_hashes": num_hashes,
-                "bands": bands,
-                "id_type": dict(corpus_df.dtypes)[id_col],
-                "data_fingerprint": fp,
-            }
-        ),
+    fsutil.commit_artifact(
+        corpus_df.sparkSession, path, MINHASH_META_FILE, _MH_SUBS,
+        {
+            "shingle_k": shingle_k,
+            "num_hashes": num_hashes,
+            "bands": bands,
+            "id_type": dict(corpus_df.dtypes)[id_col],
+        },
     )
     return path
 
 
-def _mh_subdirs(path: str, meta: dict) -> tuple[str, str]:
-    """Resolve the LIVE bands/grams subdir paths — the sidecar is the
-    pointer (``compact_minhash_index`` writes new generation dirs and
-    repoints it); uncompacted artifacts default to ``bands``/``grams``
-    (the :func:`compact_code_index` shape)."""
-    return (f"{path}/{meta.get('bands_dir', 'bands')}",
-            f"{path}/{meta.get('grams_dir', 'grams')}")
+def _load_minhash_index(spark, path: str) -> tuple[dict, dict[str, str]]:
+    from .. import fsutil
+
+    return fsutil.load_artifact(spark, path, MINHASH_META_FILE, _MH_SUBS,
+                                "save_minhash_index")
 
 
 def append_minhash_index(
@@ -757,21 +743,12 @@ def append_minhash_index(
     sidecar, so an append is bit-identical to a rebuild on the union
     unconditionally — no envelope check, no recalibration boundary.
     Cost ∝ delta (one Arrow pass over the new rows); bands/ and grams/
-    gain new files; a crash mid-append leaves the fingerprints
-    mismatched → probes refuse the artifact as stale. Duplicate ids
-    are the caller's contract, exactly as in the builder."""
-    import json
-
+    gain new files, committed as in :func:`fsutil.load_artifact`.
+    Duplicate ids are the caller's contract, exactly as in the builder."""
     from .. import fsutil
 
     spark = new_corpus_rows.sparkSession
-    raw_meta = fsutil.read_small(spark, f"{path}/{MINHASH_META_FILE}")
-    if raw_meta is None:
-        raise FileNotFoundError(
-            f"no minhash index sidecar at {path}/{MINHASH_META_FILE}; "
-            "build one with save_minhash_index"
-        )
-    meta = json.loads(raw_meta)
+    meta, live = _load_minhash_index(spark, path)
     want_t = meta.get("id_type")
     got_t = dict(new_corpus_rows.dtypes).get(id_col)
     if want_t is not None and got_t != want_t:
@@ -781,103 +758,33 @@ def append_minhash_index(
             "— cast the delta's ids to match (mixed id types would "
             "write schema-mismatched parquet into bands/grams)"
         )
-    bands_p, grams_p = _mh_subdirs(path, meta)
-    for sub, live in zip(("bands", "grams"), (bands_p, grams_p)):
-        want = meta["data_fingerprint"].get(sub)
-        if want is not None and want != fsutil.data_fingerprint(
-                spark, live):
-            raise ValueError(
-                f"minhash index at {path} is stale: {sub}/ changed since "
-                "the sidecar was written — rebuild with save_minhash_index"
-            )
-    shingle_k = int(meta["shingle_k"])
     base, banded = _portable_sig_pipeline(
-        new_corpus_rows, text_col, id_col, shingle_k,
+        new_corpus_rows, text_col, id_col, int(meta["shingle_k"]),
         int(meta["num_hashes"]), int(meta["bands"])
     )
-    banded.write.mode("append").parquet(bands_p)
-    base.select("id", "grams").write.mode("append").parquet(grams_p)
+    banded.write.mode("append").parquet(live["bands"])
+    base.select("id", "grams").write.mode("append").parquet(live["grams"])
     base.unpersist()
-    meta["data_fingerprint"] = {
-        "bands": fsutil.data_fingerprint(spark, bands_p),
-        "grams": fsutil.data_fingerprint(spark, grams_p),
-    }
     meta["appends"] = int(meta.get("appends", 0)) + 1
-    fsutil.write_small(spark, f"{path}/{MINHASH_META_FILE}",
-                       json.dumps(meta))
+    fsutil.commit_artifact(spark, path, MINHASH_META_FILE, _MH_SUBS, meta)
     return path
 
 
 def compact_minhash_index(spark, path: str,
                           rows_per_file: int = 2_000_000) -> int:
     """Re-compact a :func:`save_minhash_index` artifact after many
-    appends — the minhash twin of
-    :func:`similarity.compact_code_index`, same pointer-safe protocol
-    (write new generation dirs ``bands_g<N>``/``grams_g<N>`` → repoint
-    the sidecar with fresh fingerprints = THE commit → lazy-delete
-    superseded dirs, orphans swept by the next run). A pure re-layout:
-    the portable hash family is fixed and signature params live in the
-    sidecar, so no re-shingling and the probe is set-identical before
-    and after (tested). Returns parquet data files compacted away."""
-    import json
-
+    appends into ``bands_g<N>``/``grams_g<N>``
+    (:func:`fsutil.compact_artifact`). A pure re-layout: the portable
+    hash family is fixed and signature params live in the sidecar, so
+    no re-shingling and the probe is set-identical before and after
+    (tested). Returns parquet data files compacted away."""
     from .. import fsutil
 
-    raw_meta = fsutil.read_small(spark, f"{path}/{MINHASH_META_FILE}")
-    if raw_meta is None:
-        raise FileNotFoundError(
-            f"no minhash index sidecar at {path}/{MINHASH_META_FILE}")
-    meta = json.loads(raw_meta)
-    bands_p, grams_p = _mh_subdirs(path, meta)
-    for sub, live in zip(("bands", "grams"), (bands_p, grams_p)):
-        want = meta["data_fingerprint"].get(sub)
-        if want is not None and want != fsutil.data_fingerprint(
-                spark, live):
-            raise ValueError(
-                f"minhash index at {path} is stale: {sub}/ changed since "
-                "the sidecar was written — rebuild before compacting"
-            )
-    from .similarity import _parquet_file_count
-
-    files_before = (_parquet_file_count(spark, bands_p)
-                    + _parquet_file_count(spark, grams_p))
-    grams = spark.read.parquet(grams_p)
-    n = grams.count()
-    # same width rule as compact_code_index: bounded file size at
-    # scale, floored at cluster parallelism so small compacted
-    # artifacts keep enough splits for the bucket-join scans
-    parts = max(1, -(-n // rows_per_file),
-                min(spark.sparkContext.defaultParallelism,
-                    -(-n // 10_000)))
-    gen = int(meta.get("compactions", 0)) + 1
-    new_bands = f"{path}/bands_g{gen}"
-    new_grams = f"{path}/grams_g{gen}"
-    (spark.read.parquet(bands_p).repartition(parts)
-     .write.mode("overwrite").parquet(new_bands))
-    grams.repartition(parts).write.mode("overwrite").parquet(new_grams)
-    meta["bands_dir"] = f"bands_g{gen}"
-    meta["grams_dir"] = f"grams_g{gen}"
-    meta["compactions"] = gen
-    meta["data_fingerprint"] = {
-        "bands": fsutil.data_fingerprint(spark, new_bands),
-        "grams": fsutil.data_fingerprint(spark, new_grams),
-    }
-    fsutil.write_small(spark, f"{path}/{MINHASH_META_FILE}",
-                       json.dumps(meta))  # the commit
-    import re as _re
-
-    _, hpath, fs = fsutil.hfs(spark, path)
-    live_dirs = {meta["bands_dir"], meta["grams_dir"]}
-    for st in fs.listStatus(hpath(path)):
-        name = st.getPath().getName()
-        if name in live_dirs:
-            continue
-        if name in ("bands", "grams") or _re.fullmatch(
-                r"(bands|grams)_g\d+", name):
-            fs.delete(st.getPath(), True)
-    files_after = (_parquet_file_count(spark, new_bands)
-                   + _parquet_file_count(spark, new_grams))
-    return files_before - files_after
+    return fsutil.compact_artifact(
+        spark, path, MINHASH_META_FILE,
+        {"bands": DataFrame.repartition, "grams": DataFrame.repartition},
+        "save_minhash_index", "grams", rows_per_file,
+    )
 
 
 def fuzzy_dedup_against_prebuilt(
@@ -893,31 +800,9 @@ def fuzzy_dedup_against_prebuilt(
     artifact: the corpus is never re-shingled — the banded table joins
     directly and the stored gram sets serve the exact verify. Signature
     parameters come from the sidecar, so probe and build can never
-    disagree. Refuses a stale artifact (cell data rewritten since the
-    sidecar) — there is no primary to fall back to, the same contract as
-    the IVF artifact."""
-    import json
-
-    from .. import fsutil
-
-    raw_meta = fsutil.read_small(spark, f"{path}/{MINHASH_META_FILE}")
-    if raw_meta is None:
-        raise FileNotFoundError(
-            f"no minhash index sidecar at {path}/{MINHASH_META_FILE}; "
-            "build one with save_minhash_index"
-        )
-    meta = json.loads(raw_meta)
-    bands_p, grams_p = _mh_subdirs(path, meta)
-    fp = meta.get("data_fingerprint") or {}
-    for part, live in zip(("bands", "grams"), (bands_p, grams_p)):
-        want = fp.get(part)
-        if want is not None and want != fsutil.data_fingerprint(
-            spark, live
-        ):
-            raise ValueError(
-                f"minhash index at {path} is stale ({part} changed since "
-                "the sidecar was written) — rebuild with save_minhash_index"
-            )
+    disagree. A stale artifact is refused (:func:`fsutil.load_artifact`).
+    """
+    meta, live = _load_minhash_index(spark, path)
     shingle_k = int(meta["shingle_k"])
     num_hashes = int(meta["num_hashes"])
     bands = int(meta["bands"])
@@ -925,7 +810,7 @@ def fuzzy_dedup_against_prebuilt(
     base_n, banded_n = _portable_sig_pipeline(
         new_df, text_col, id_col, shingle_k, num_hashes, bands
     )
-    banded_c = spark.read.parquet(bands_p)
+    banded_c = spark.read.parquet(live["bands"])
     banded_n = _cap_band_buckets(banded_n, max_bucket)
     banded_c = _cap_band_buckets(banded_c, max_bucket)
     cand = (
@@ -935,7 +820,7 @@ def fuzzy_dedup_against_prebuilt(
         .dropDuplicates(["new_id", "corpus_id"])
     )
     cand = _materialize(cand)
-    gb = spark.read.parquet(grams_p).join(
+    gb = spark.read.parquet(live["grams"]).join(
         cand.select(F.col("corpus_id").alias("id")).distinct(), "id", "left_semi"
     )
     return _best_match(_exact_jaccard(

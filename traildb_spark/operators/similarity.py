@@ -347,13 +347,12 @@ def save_ivf_index(
     -- the layout IS the index, same philosophy as ``finalize``. This is
     the concrete 100 TB deployment form of ``ivf_topk``'s cell
     restriction (which joins in-memory assignments per query run).
-    Returns ``path``.
+    Returns ``path``. The cells are ``data/`` of the
+    :func:`fsutil.load_artifact` protocol: a probe against rewritten
+    cells with the old centroids would route to wrong cells.
     """
-    import json
-
     from .. import fsutil
 
-    spark = corpus.sparkSession
     assignments, cents = ivf_build(corpus, num_centroids, vec_col, id_col, iters)
     data = (
         corpus.select(
@@ -363,23 +362,14 @@ def save_ivf_index(
         .repartition("cid")
     )
     data.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/data")
-    # sidecar through the Hadoop FS API (fsutil) so the artifact is whole
-    # on hdfs://s3a:// like every other metadata path; the fingerprint of
-    # the just-written cells ties centroids to data (reference index↔data
-    # checksum analog, tdbcli/tdb_index.c:439-451) — a probe against
-    # rewritten cells with the old centroids would route to wrong cells
-    fsutil.write_small(
-        spark,
-        f"{path}/{IVF_META_FILE}",
-        json.dumps(
-            {
-                "num_centroids": int(cents.shape[0]),
-                "dim": int(cents.shape[1]),
-                "id_type": dict(corpus.dtypes)[id_col],
-                "centroids": [[float(x) for x in row] for row in cents],
-                "data_fingerprint": fsutil.data_fingerprint(spark, f"{path}/data"),
-            }
-        ),
+    fsutil.commit_artifact(
+        corpus.sparkSession, path, IVF_META_FILE, ("data",),
+        {
+            "num_centroids": int(cents.shape[0]),
+            "dim": int(cents.shape[1]),
+            "id_type": dict(corpus.dtypes)[id_col],
+            "centroids": [[float(x) for x in row] for row in cents],
+        },
     )
     return path
 
@@ -401,33 +391,16 @@ def ivf_topk_prebuilt(
     per-query rank over the probed cells, identical semantics to
     ``ivf_topk`` given the same centroids.
 
-    Refuses a stale artifact: if the cell parquet was rewritten since the
-    sidecar was built (fingerprint mismatch) the centroids no longer
-    describe the cells, so probing would silently return wrong neighbors
-    — unlike the z-index (which falls back to the primary scan) there is
-    no primary here to fall back to, hence a hard error telling the
-    caller to rebuild (reference consistency-guard analog,
-    `tdbcli/tdb_index.c:439-451,701-702`).
+    Refuses a stale artifact (:func:`fsutil.load_artifact`): unlike the
+    z-index, which falls back to the primary scan, there is no primary
+    here to fall back to.
     """
-    import json
-
     import numpy as np
 
     from .. import fsutil
 
-    raw = fsutil.read_small(spark, f"{path}/{IVF_META_FILE}")
-    if raw is None:
-        raise FileNotFoundError(
-            f"no IVF index sidecar at {path}/{IVF_META_FILE}; "
-            "build one with save_ivf_index"
-        )
-    meta = json.loads(raw)
-    want = meta.get("data_fingerprint")
-    if want is not None and want != fsutil.data_fingerprint(spark, f"{path}/data"):
-        raise ValueError(
-            f"IVF index at {path} is stale: cell data changed since the "
-            "sidecar was written — rebuild with save_ivf_index"
-        )
+    meta, live = fsutil.load_artifact(
+        spark, path, IVF_META_FILE, ("data",), "save_ivf_index")
     cents = np.asarray(meta["centroids"], dtype=np.float64)
     qpdf = queries.select(query_id_col, vec_col).toPandas()
     qid_t = dict(queries.dtypes)[query_id_col]
@@ -452,7 +425,7 @@ def ivf_topk_prebuilt(
         ],
         f"query_id {qid_t}, qv array<double>, cid int",
     )
-    data = spark.read.parquet(f"{path}/data")
+    data = spark.read.parquet(live["data"])
     # the IN-list on the PARTITION column is what prunes files; the join
     # then matches each probed cell to its queries
     wanted = sorted({int(c) for row in order for c in row})
@@ -1276,6 +1249,7 @@ def sq8_topk(
 
 
 SQ8_META_FILE = "_sq8_meta.json"
+_CODE_SUBS = ("codes", "full")
 
 
 def save_sq8_index(
@@ -1297,10 +1271,8 @@ def save_sq8_index(
       corpus_id, so the probe's rerank — a bounded |Q|·rerank IN-list
       pushed into the scan — reads only the row groups holding the
       survivors instead of the corpus.
-    - sidecar JSON: the calibration grid (per-dim lo/hi), dim, id type,
-      and a data fingerprint per subdir (same staleness contract as
-      :func:`save_ivf_index`, reference index↔data checksum analog
-      ``tdbcli/tdb_index.c:439-451``).
+    - sidecar JSON: the calibration grid (per-dim lo/hi), dim, id type
+      and ``kind``, under the :func:`fsutil.load_artifact` protocol.
 
     Codes are computed ONCE here with the exact :func:`sq8_topk`
     expressions, so a probe returns bit-identical candidates and ranks
@@ -1356,83 +1328,42 @@ def _coded_tables(coded: DataFrame, parts: int):
         _pack_codes(F.col("__cq")).alias("code"),
         code_norm2.alias("n2"),
     )
-    full = (coded.select("corpus_id", "cv20")
-            .repartitionByRange(parts, "corpus_id")
+    return codes, _range_sorted(coded.select("corpus_id", "cv20"), parts)
+
+
+def _range_sorted(df: DataFrame, parts: int) -> DataFrame:
+    """``parts`` files, each one contiguous corpus_id range, sorted."""
+    return (df.repartitionByRange(parts, "corpus_id")
             .sortWithinPartitions("corpus_id"))
-    return codes, full
 
 
-def _code_subdirs(path: str, meta: dict) -> tuple[str, str]:
-    """Resolve the LIVE codes/full subdir paths. The sidecar is the
-    pointer: :func:`compact_code_index` writes re-laid-out generation
-    dirs (``codes_g<N>``/``full_g<N>``) and repoints the sidecar as its
-    commit; artifacts that never compacted default to ``codes``/
-    ``full``."""
-    return (f"{path}/{meta.get('codes_dir', 'codes')}",
-            f"{path}/{meta.get('full_dir', 'full')}")
-
-
-def _refresh_code_meta(spark, path: str, meta: dict) -> None:
-    """Re-fingerprint the live codes/full dirs and (re)write the
-    sidecar — always the LAST step of a build, append, or compaction,
-    so any crash mid-write leaves fingerprints that no longer match and
-    probes refuse the artifact as stale instead of serving a
-    half-written one."""
-    import json
-
-    from .. import fsutil
-
-    meta = dict(meta)
-    codes_p, full_p = _code_subdirs(path, meta)
-    meta["codes_fingerprint"] = fsutil.data_fingerprint(spark, codes_p)
-    meta["full_fingerprint"] = fsutil.data_fingerprint(spark, full_p)
-    fsutil.write_small(spark, f"{path}/{SQ8_META_FILE}", json.dumps(meta))
-
-
-def _write_code_artifact(spark, coded: DataFrame, path: str,
-                         meta: dict, parts: int) -> None:
+def _write_code_artifact(spark, coded: DataFrame, path: str, meta: dict,
+                         parts: int, live: dict | None = None) -> None:
     """Shared artifact writer for the compressed-scan ANN family:
     ``coded`` carries (corpus_id, __cq array<long 0..255>, cv20).
     codes/ = packed 1-byte-per-dim BINARY + norm; full/ = q20 lattice
     range-sorted by corpus_id (the probe's point-read side); sidecar =
-    calibration meta + per-subdir staleness fingerprints."""
-    codes, full = _coded_tables(coded, parts)
-    codes.write.mode("overwrite").parquet(f"{path}/codes")
-    full.write.mode("overwrite").parquet(f"{path}/full")
-    _refresh_code_meta(spark, path, meta)
-
-
-def _load_code_meta(spark, path: str, kind: str, who: str,
-                    check_fresh: bool = True) -> dict:
-    """Load + validate the SQ8-family sidecar: present, matching
-    ``kind``, and (optionally) both subdir fingerprints current —
-    the shared head of the probe and append paths."""
-    import json
-
+    calibration meta, committed last. With ``live`` (the dirs of a
+    loaded artifact) the rows are appended instead of written fresh."""
     from .. import fsutil
 
-    raw = fsutil.read_small(spark, f"{path}/{SQ8_META_FILE}")
-    if raw is None:
-        raise FileNotFoundError(
-            f"no SQ8-family index sidecar at {path}/{SQ8_META_FILE}; "
-            f"build one with save_{kind}_index"
-        )
-    meta = json.loads(raw)
-    if meta.get("kind", "sq8") != kind:
-        raise ValueError(
-            f"index at {path} is kind={meta.get('kind')!r}, not {kind} — "
-            f"{who} requires a save_{kind}_index artifact"
-        )
-    if check_fresh:
-        for sub, live in zip(("codes", "full"), _code_subdirs(path, meta)):
-            want = meta.get(f"{sub}_fingerprint")
-            if want is not None and want != fsutil.data_fingerprint(
-                    spark, live):
-                raise ValueError(
-                    f"index at {path} is stale: {sub}/ changed since the "
-                    f"sidecar was written — rebuild with save_{kind}_index"
-                )
-    return meta
+    codes, full = _coded_tables(coded, parts)
+    mode = "overwrite" if live is None else "append"
+    if live is None:
+        live = {sub: f"{path}/{sub}" for sub in _CODE_SUBS}
+    else:
+        meta["appends"] = int(meta.get("appends", 0)) + 1
+    codes.write.mode(mode).parquet(live["codes"])
+    full.write.mode(mode).parquet(live["full"])
+    fsutil.commit_artifact(spark, path, SQ8_META_FILE, _CODE_SUBS, meta)
+
+
+def _load_code_index(spark, path: str,
+                     kind: str) -> tuple[dict, dict[str, str]]:
+    from .. import fsutil
+
+    return fsutil.load_artifact(spark, path, SQ8_META_FILE, _CODE_SUBS,
+                                f"save_{kind}_index", kinds=(kind,))
 
 
 def _check_grid_envelope(dlo: list, dhi: list, lo: list, hi: list,
@@ -1497,17 +1428,15 @@ def append_sq8_index(
     file is itself range-sorted so row-group pruning stays tight for
     point reads. After many small appends, :func:`compact_code_index`
     re-compacts the layout (pure re-layout — the grid is frozen, so no
-    recalibration). Crash mid-append leaves fingerprints mismatched →
-    probes AND further appends refuse the artifact as stale (loud,
-    never wrong); recovery is a rebuild — a re-append would be refused
-    by the same staleness check, and blindly forcing one would
-    duplicate the delta's committed rows. Duplicate ids are the
+    recalibration). A crash mid-append leaves fingerprints that no longer
+    match (:func:`fsutil.load_artifact`), so probes AND further appends
+    refuse the artifact; recovery is a rebuild. Duplicate ids are the
     caller's contract, exactly as in :func:`save_sq8_index`.
     """
     from .dedup import quantize_q20
 
     spark = new_rows.sparkSession
-    meta = _load_code_meta(spark, path, "sq8", "append_sq8_index")
+    meta, live = _load_code_index(spark, path, "sq8")
     _check_id_type(meta, new_rows, id_col, "append_sq8_index")
     dim = int(meta["dim"])
     dlo, dhi = _sq8_calibrate(new_rows, vec_col, dim, "append_sq8_index")
@@ -1520,13 +1449,8 @@ def append_sq8_index(
         _sq8_expr(F.col(vec_col), lo_arr, hi_arr).alias("__cq"),
         quantize_q20(F.col(vec_col)).alias("cv20"),
     )
-    codes, full = _coded_tables(
-        coded, parts=max(new_rows.rdd.getNumPartitions(), 1))
-    codes_p, full_p = _code_subdirs(path, meta)
-    codes.write.mode("append").parquet(codes_p)
-    full.write.mode("append").parquet(full_p)
-    meta["appends"] = int(meta.get("appends", 0)) + 1
-    _refresh_code_meta(spark, path, meta)
+    _write_code_artifact(spark, coded, path, meta,
+                         max(new_rows.rdd.getNumPartitions(), 1), live)
     return path
 
 
@@ -1553,35 +1477,12 @@ def sq8_topk_prebuilt(
        the ``full/`` scan (row-group pruning on the range-sorted
        layout: point reads, not a corpus scan).
 
-    Stale artifacts are refused (fingerprint mismatch on either subdir
-    → ValueError), absent sidecar → FileNotFoundError, same contract as
-    :func:`ivf_topk_prebuilt`.
+    Stale artifacts and a missing sidecar are refused
+    (:func:`fsutil.load_artifact`), as in :func:`ivf_topk_prebuilt`.
     """
-    import json
+    from .dedup import quantize_q20
 
-    from .. import fsutil
-    from .dedup import quantize_q20, quantized_cosine_udf
-
-    raw = fsutil.read_small(spark, f"{path}/{SQ8_META_FILE}")
-    if raw is None:
-        raise FileNotFoundError(
-            f"no SQ8 index sidecar at {path}/{SQ8_META_FILE}; "
-            "build one with save_sq8_index"
-        )
-    meta = json.loads(raw)
-    if meta.get("kind", "sq8") != "sq8":
-        raise ValueError(
-            f"index at {path} is kind={meta.get('kind')!r}, not sq8 — "
-            "probe it with the matching *_topk_prebuilt"
-        )
-    for sub, live in zip(("codes", "full"), _code_subdirs(path, meta)):
-        want = meta.get(f"{sub}_fingerprint")
-        if want is not None and want != fsutil.data_fingerprint(
-                spark, live):
-            raise ValueError(
-                f"SQ8 index at {path} is stale: {sub}/ changed since the "
-                "sidecar was written — rebuild with save_sq8_index"
-            )
+    meta, live = _load_code_index(spark, path, "sq8")
     dim = int(meta["dim"])
     lo_arr = F.array(*[F.lit(float(x)) for x in meta["lo"]])
     hi_arr = F.array(*[F.lit(float(x)) for x in meta["hi"]])
@@ -1601,8 +1502,7 @@ def sq8_topk_prebuilt(
                     F.lit(0).cast("long"), lambda acc, x: acc + x),
     )
 
-    return _code_table_probe(spark, path, meta, q, k, rerank,
-                             signed=True)
+    return _code_table_probe(spark, live, q, k, rerank, signed=True)
 
 
 def _packed_dot(code: Column, qq: Column) -> Column:
@@ -1621,7 +1521,7 @@ def _packed_dot(code: Column, qq: Column) -> Column:
     return dot(code, qq)
 
 
-def _code_table_probe(spark, path: str, meta: dict, q: DataFrame, k: int,
+def _code_table_probe(spark, live: dict[str, str], q: DataFrame, k: int,
                       rerank: int, signed: bool) -> DataFrame:
     """Shared probe tail for the persisted compressed-scan artifacts:
     code-table scan → code-space-cosine candidates (partial top-k) →
@@ -1632,8 +1532,7 @@ def _code_table_probe(spark, path: str, meta: dict, q: DataFrame, k: int,
     no negative branch — bit-parity requires matching forms)."""
     from .dedup import quantized_cosine_udf
 
-    codes_p, full_p = _code_subdirs(path, meta)
-    codes = spark.read.parquet(codes_p)
+    codes = spark.read.parquet(live["codes"])
     den = F.floor(
         F.sqrt((F.col("n2") * F.col("n2q")).cast("double"))
     ).cast("long")
@@ -1668,7 +1567,7 @@ def _code_table_probe(spark, path: str, meta: dict, q: DataFrame, k: int,
     # codes while leaving the candidate lineage visible to plan audits
     surv = cands.persist()
     ids = [r[0] for r in surv.select("corpus_id").distinct().collect()]
-    full = spark.read.parquet(full_p).filter(
+    full = spark.read.parquet(live["full"]).filter(
         F.col("corpus_id").isin(ids))
     rerank_w = Window.partitionBy("query_id").orderBy(
         F.desc("cos"), F.asc("corpus_id")
@@ -1746,7 +1645,7 @@ def save_jl_sq8_index(
     the exact direct-operator expressions (JL projection on the
     deterministic Rademacher planes, then SQ8 on the reduced space), so
     a probe is bit-identical to the direct run. Same layout and
-    staleness contract as :func:`save_sq8_index`."""
+    sidecar protocol as :func:`save_sq8_index`."""
     from .dedup import quantize_q20
 
     spark = corpus.sparkSession
@@ -1800,7 +1699,7 @@ def append_jl_sq8_index(
     from .dedup import quantize_q20
 
     spark = new_rows.sparkSession
-    meta = _load_code_meta(spark, path, "jl_sq8", "append_jl_sq8_index")
+    meta, live = _load_code_index(spark, path, "jl_sq8")
     _check_id_type(meta, new_rows, id_col, "append_jl_sq8_index")
     dim, out_dim = int(meta["dim"]), int(meta["out_dim"])
     q10, project = _jl_project_exprs(vec_col, dim, out_dim,
@@ -1828,19 +1727,15 @@ def append_jl_sq8_index(
             _sq8_expr(F.col("rv"), lo_arr, hi_arr).alias("__cq"),
             "cv20",
         )
-        codes, full = _coded_tables(
-            coded, parts=max(new_rows.rdd.getNumPartitions(), 1))
-        codes_p, full_p = _code_subdirs(path, meta)
-        codes.write.mode("append").parquet(codes_p)
-        full.write.mode("append").parquet(full_p)
+        _write_code_artifact(spark, coded, path, meta,
+                             max(new_rows.rdd.getNumPartitions(), 1), live)
     finally:
         proj.unpersist()
-    meta["appends"] = int(meta.get("appends", 0)) + 1
-    _refresh_code_meta(spark, path, meta)
     return path
 
 
 def _parquet_file_count(spark, path: str) -> int:
+    """Parquet files directly under ``path``."""
     from .. import fsutil
 
     _, hpath, fs = fsutil.hfs(spark, path)
@@ -1860,86 +1755,19 @@ def compact_code_index(spark, path: str,
     bit-identical before and after (tested:
     ``test_compact_code_index_parity_and_layout``).
 
-    Pointer-safe protocol (the sidecar IS the pointer — the
-    ``compact_dedup_state`` shape; same build-amortization family as
-    the reference's ``tdb_cons_append``, src/tdb_cons.c:574-657):
-
-    1. write the re-laid-out tables to NEW generation dirs
-       ``codes_g<N>``/``full_g<N>`` — nothing reads them yet;
-    2. rewrite the sidecar pointing at the new dirs with fresh
-       fingerprints — THE commit (the same last-step sidecar rewrite
-       every build and append already uses);
-    3. lazily delete superseded generation dirs — a crash here leaves
-       orphans readers already ignore, swept by the next compaction.
-
-    Run while no append is in flight (compaction and append both end in
-    a sidecar rewrite; the loser's fingerprints refuse, nothing is
-    silently lost). Returns the number of parquet data files compacted
-    away."""
-    import json
-
+    The new ``codes_g<N>``/``full_g<N>`` generation commits and the
+    superseded one is swept as in :func:`fsutil.compact_artifact`. Run
+    while no append is in flight: both end in a sidecar commit, and the
+    loser's fingerprints refuse, so nothing is silently lost. Returns the
+    number of parquet data files compacted away."""
     from .. import fsutil
 
-    raw = fsutil.read_small(spark, f"{path}/{SQ8_META_FILE}")
-    if raw is None:
-        raise FileNotFoundError(
-            f"no SQ8-family index sidecar at {path}/{SQ8_META_FILE}")
-    meta = json.loads(raw)
-    if meta.get("kind") not in ("sq8", "jl_sq8"):
-        raise ValueError(
-            f"index at {path} is kind={meta.get('kind')!r}, not an "
-            "SQ8-family artifact"
-        )
-    # refuse a stale artifact: compacting unverified bytes would bless
-    # them under fresh fingerprints
-    for sub, live in zip(("codes", "full"), _code_subdirs(path, meta)):
-        want = meta.get(f"{sub}_fingerprint")
-        if want is not None and want != fsutil.data_fingerprint(
-                spark, live):
-            raise ValueError(
-                f"index at {path} is stale: {sub}/ changed since the "
-                "sidecar was written — rebuild before compacting"
-            )
-    codes_p, full_p = _code_subdirs(path, meta)
-    files_before = (_parquet_file_count(spark, codes_p)
-                    + _parquet_file_count(spark, full_p))
-    full = spark.read.parquet(full_p)
-    n = full.count()
-    # width: bounded-size files at scale (rows_per_file), floored at the
-    # cluster's parallelism — collapsing a small index to 1-2 files
-    # would starve the probe's codes scan of tasks (each file is
-    # typically one row group, hence one split)
-    parts = max(1, -(-n // rows_per_file),
-                min(spark.sparkContext.defaultParallelism,
-                    -(-n // 10_000)))
-    gen = int(meta.get("compactions", 0)) + 1
-    new_codes = f"{path}/codes_g{gen}"
-    new_full = f"{path}/full_g{gen}"
-    (spark.read.parquet(codes_p).repartition(parts)
-     .write.mode("overwrite").parquet(new_codes))
-    (full.repartitionByRange(parts, "corpus_id")
-     .sortWithinPartitions("corpus_id")
-     .write.mode("overwrite").parquet(new_full))
-    meta["codes_dir"] = f"codes_g{gen}"
-    meta["full_dir"] = f"full_g{gen}"
-    meta["compactions"] = gen
-    _refresh_code_meta(spark, path, meta)  # the commit
-    # lazy delete: every codes*/full* dir that is not the live pair —
-    # covers the superseded generation AND orphans of crashed runs
-    import re as _re
-
-    _, hpath, fs = fsutil.hfs(spark, path)
-    live = {meta["codes_dir"], meta["full_dir"]}
-    for st in fs.listStatus(hpath(path)):
-        name = st.getPath().getName()
-        if name in live:
-            continue
-        if name in ("codes", "full") or _re.fullmatch(
-                r"(codes|full)_g\d+", name):
-            fs.delete(st.getPath(), True)
-    files_after = (_parquet_file_count(spark, new_codes)
-                   + _parquet_file_count(spark, new_full))
-    return files_before - files_after
+    return fsutil.compact_artifact(
+        spark, path, SQ8_META_FILE,
+        {"codes": DataFrame.repartition, "full": _range_sorted},
+        "save_sq8_index or save_jl_sq8_index", "full", rows_per_file,
+        kinds=("sq8", "jl_sq8"),
+    )
 
 
 def jl_sq8_topk_prebuilt(
@@ -1960,31 +1788,9 @@ def jl_sq8_topk_prebuilt(
     :func:`sq8_topk_prebuilt`; the non-negative candidate metric
     mirrors jl_sq8_topk's expression exactly (its codes are 0..255, so
     the direct operator has no negative branch)."""
-    import json
-
-    from .. import fsutil
     from .dedup import quantize_q20
 
-    raw = fsutil.read_small(spark, f"{path}/{SQ8_META_FILE}")
-    if raw is None:
-        raise FileNotFoundError(
-            f"no SQ8-family index sidecar at {path}/{SQ8_META_FILE}; "
-            "build one with save_jl_sq8_index"
-        )
-    meta = json.loads(raw)
-    if meta.get("kind") != "jl_sq8":
-        raise ValueError(
-            f"index at {path} is kind={meta.get('kind')!r}, not jl_sq8 — "
-            "probe it with the matching *_topk_prebuilt"
-        )
-    for sub, live in zip(("codes", "full"), _code_subdirs(path, meta)):
-        want = meta.get(f"{sub}_fingerprint")
-        if want is not None and want != fsutil.data_fingerprint(
-                spark, live):
-            raise ValueError(
-                f"JL-SQ8 index at {path} is stale: {sub}/ changed since "
-                "the sidecar was written — rebuild with save_jl_sq8_index"
-            )
+    meta, live = _load_code_index(spark, path, "jl_sq8")
     dim, out_dim = int(meta["dim"]), int(meta["out_dim"])
     lo_arr = F.array(*[F.lit(float(x)) for x in meta["lo"]])
     hi_arr = F.array(*[F.lit(float(x)) for x in meta["hi"]])
@@ -2002,8 +1808,7 @@ def jl_sq8_topk_prebuilt(
         F.aggregate(F.transform(F.col("qq"), lambda x: x * x),
                     F.lit(0).cast("long"), lambda acc, x: acc + x),
     )
-    return _code_table_probe(spark, path, meta, q, k, rerank,
-                             signed=False)
+    return _code_table_probe(spark, live, q, k, rerank, signed=False)
 
 
 def label_centroid_cosines(
