@@ -652,7 +652,9 @@ def _png_fixture_payload():
 # v4: index sidecars record each live subdir's fingerprint as
 # <sub>_fingerprint (an earlier MinHash sidecar is refused as stale) and
 # the z-index lives in a _zindex/_g<N> generation.
-_MEDIA_CACHE_VERSION = "4"
+# v5: the z-index sidecar entry records the generation's digest and both
+# schemas; an entry without the digest is ignored with a warning.
+_MEDIA_CACHE_VERSION = "5"
 
 
 def _media_table(spark, sf_dir, target_kind, payload_udf, cache_name=None):

@@ -138,6 +138,37 @@ def test_zindex_legacy_flat_layout_opens_and_rebuild_sweeps_it(spark, zdb):
     assert _routed_to(ds, "_g1") and _rows(ds) == want
 
 
+def test_zindex_generation_files_are_fingerprinted(spark, zdb):
+    """``open`` routes to the index only while the live generation's
+    files match the digest its sidecar entry records: with no digest
+    recorded, or with a part file deleted, it warns "stale" and a covered
+    filter returns the primary's rows, not the rows the remaining index
+    files hold."""
+    import pyarrow.parquet as pq
+
+    path, want = zdb
+    meta = json.loads(open(os.path.join(path, META_FILE)).read())
+    zmeta = meta["zindex"]
+    update_meta(spark, path, zindex={
+        k: v for k, v in zmeta.items() if k != "index_fingerprint"})
+    with pytest.warns(UserWarning, match="stale"):
+        assert TrailDataset.open(spark, path)._zindex is None
+    update_meta(spark, path, zindex=zmeta)
+    assert _routed_to(TrailDataset.open(spark, path), "_g1")
+
+    gen = os.path.join(path, "_zindex", "_g1")
+    with_x = [
+        name for name in sorted(os.listdir(gen))
+        if name.endswith(".parquet")
+        and "x" in pq.read_table(os.path.join(gen, name)).column("f").to_pylist()
+    ]
+    os.remove(os.path.join(gen, with_x[0]))
+    with pytest.warns(UserWarning, match="stale"):
+        ds = TrailDataset.open(spark, path)
+    assert ds._zindex is None
+    assert _rows(ds) == want
+
+
 def test_failed_sidecar_write_keeps_previous_sidecar(
         spark, sf_dir, tmp_path, zdb):
     """A sidecar write whose stream fails leaves the previous sidecar
@@ -210,15 +241,19 @@ def test_minhash_sidecar_of_the_old_format_is_refused(spark, sf_dir, tmp_path):
         dedup.fuzzy_dedup_against_prebuilt(spark, idx, docs)
 
 
-def test_sq8_probe_lists_the_artifact_once(spark, sf_dir, tmp_path):
+def test_sq8_probe_lists_the_artifact_once(spark, sf_dir, tmp_path, monkeypatch):
     """Verifying both live subdirs of an SQ8 artifact takes one listing
-    job over the artifact root, not one per subdir: a probe call (which
-    collects its survivor ids eagerly) runs 9 jobs here, 10 with a
-    listing per subdir."""
+    over the artifact root, not one per subdir, and the listing runs no
+    Spark job: a probe call (which collects its survivor ids eagerly)
+    runs 8 jobs here, 9 when the listing was a job."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(60)
     idx = str(tmp_path / "sq8")
     similarity.save_sq8_index(emb, idx)
     queries = emb.limit(1).select(F.col("vec_id").alias("query_id"), "embedding")
+    listings = []
+    real = fsutil._parse_listing
+    monkeypatch.setattr(fsutil, "_parse_listing",
+                        lambda *args: listings.append(args) or real(*args))
     sc = spark.sparkContext
     sc.setJobGroup("sq8_probe", "sq8_probe")
     try:
@@ -226,4 +261,5 @@ def test_sq8_probe_lists_the_artifact_once(spark, sf_dir, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("sq8_probe")) <= 9
+    assert len(listings) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup("sq8_probe")) <= 8

@@ -752,31 +752,10 @@ def test_select_uuids_routes(spark, sharded_db):
         assert got(q) == expect
 
 
-def test_fsutil_listing_reads_no_bytes_and_matches_os_stat(spark, sharded_db):
-    """The data-file listing reads no file content (binaryFile would raise
-    on any file longer than maxLength=1 if it did), and the fingerprint
-    equals a digest recomputed from ``os.stat`` under the documented
-    rules, so sidecars written by earlier versions still validate."""
-    import hashlib
-
-    from pyspark.errors import PySparkException
-    from py4j.protocol import Py4JJavaError
-
-    from traildb_spark import fsutil
-
-    path, _ = sharded_db
-    key = "spark.sql.sources.binaryFile.maxLength"
-    spark.conf.set(key, "1")
-    try:
-        listed = sorted(fsutil.list_data_files(spark, path))
-        assert listed
-        # the limit is live: reading any content now fails
-        with pytest.raises((PySparkException, Py4JJavaError)):
-            spark.read.format("binaryFile").load(f"{path}/{listed[0][0]}").collect()
-    finally:
-        spark.conf.unset(key)
-
-    expect = []
+def _os_listing(path):
+    """(rel, size, mtime ms) of the primary data files under ``path``,
+    from ``os.stat`` under the documented listing rules."""
+    out = []
     for root, dirs, names in os.walk(path):
         rel_dir = os.path.relpath(root, path)
         parts = [] if rel_dir == "." else rel_dir.split(os.sep)
@@ -786,14 +765,167 @@ def test_fsutil_listing_reads_no_bytes_and_matches_os_stat(spark, sharded_db):
             if name.startswith((".", "_")) or not name.endswith(".parquet"):
                 continue
             st = os.stat(os.path.join(root, name))
-            expect.append(("/".join(parts + [name]), st.st_size, st.st_mtime_ns // 10**6))
-    expect.sort()
-    assert listed == expect and len(expect) >= 4
-    assert all(size > 1 for _, size, _ in listed)
-    h = hashlib.md5()
-    for rel, size, mtime in expect:
-        h.update(f"{rel}:{size}:{mtime};".encode("utf-8"))
-    assert fsutil.data_fingerprint(spark, path) == h.hexdigest()
+            out.append(("/".join(parts + [name]), st.st_size, st.st_mtime_ns // 10**6))
+    return sorted(out)
+
+
+def test_fsutil_listing_reads_no_bytes_and_matches_os_stat(spark, sharded_db, tmp_path):
+    """The data-file listing reads no file content (binaryFile would raise
+    on any file longer than maxLength=1 if it did), and the fingerprint
+    equals a digest recomputed from ``os.stat`` under the documented
+    rules, so sidecars written by earlier versions still validate. Names
+    with a space, '%', non-ASCII and ';' (the separator inside Hadoop's
+    ``FileStatus.toString``) list as they are, and so do the 34 shard
+    dirs that Spark lists with a parallel job."""
+    import hashlib
+
+    from pyspark.errors import PySparkException
+    from py4j.protocol import Py4JJavaError
+
+    from traildb_spark import fsutil
+
+    path, _ = sharded_db
+    wide = tmp_path / "wide"
+    for d in range(34):
+        (wide / f"__shard=2024-02-{d + 1:02d}").mkdir(parents=True)
+        (wide / f"__shard=2024-02-{d + 1:02d}" / "part-0.parquet").write_bytes(b"p" * (d + 2))
+    odd = wide / "__shard=a b%20é;c"
+    odd.mkdir()
+    for i, name in enumerate(["a b.parquet", "p%20q.parquet", "é ü.parquet",
+                              "x;y.parquet", "s; isDirectory=false; length=9.parquet"]):
+        (odd / name).write_bytes(b"q" * (i + 2))
+    (wide / "_zindex").mkdir()
+    (wide / "_zindex" / "z.parquet").write_bytes(b"zz")
+
+    key = "spark.sql.sources.binaryFile.maxLength"
+    spark.conf.set(key, "1")
+    try:
+        listed = {p: sorted(fsutil.list_data_files(spark, p)) for p in (path, str(wide))}
+        assert all(listed.values())
+        # the limit is live: reading any content now fails
+        first = listed[path][0][0]
+        with pytest.raises((PySparkException, Py4JJavaError)):
+            spark.read.format("binaryFile").load(f"{path}/{first}").collect()
+    finally:
+        spark.conf.unset(key)
+
+    for p, got in listed.items():
+        expect = _os_listing(p)
+        assert got == expect and len(expect) >= 4
+        assert all(size > 1 for _, size, _ in got)
+        h = hashlib.md5()
+        for rel, size, mtime in expect:
+            h.update(f"{rel}:{size}:{mtime};".encode("utf-8"))
+        assert fsutil.data_fingerprint(spark, p) == h.hexdigest()
+    assert len(listed[str(wide)]) == 34 + 5
+
+
+def test_file_status_string_format_is_pinned(spark, sharded_db, monkeypatch):
+    """The listing parses Hadoop's ``FileStatus.toString``: its format is
+    pinned here on statuses the JVM builds, a name with '; ' and '}'
+    included. A status outside the root, or of another format, falls
+    back to the getters, which list the same entries."""
+    from traildb_spark import fsutil
+
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path
+
+    def status(p):
+        return jvm.org.apache.hadoop.fs.FileStatus(1234, False, 1, 64, 1700000000123, hpath(p))
+
+    def seq(*statuses):
+        out = jvm.java.util.ArrayList()
+        for st in statuses:
+            out.add(st)
+        return jvm.scala.jdk.javaapi.CollectionConverters.asScala(out)
+
+    name = "a/x; isDirectory=true; }.parquet"
+    st = status(f"file:/d/{name}")
+    located = jvm.org.apache.hadoop.fs.LocatedFileStatus(st, None)
+    assert str(st.toString()).startswith(
+        f"FileStatus{{path=file:/d/{name}; isDirectory=false; length=1234; "
+        "replication=1; blocksize=64; modification_time=1700000000123; access_time=")
+    parse = fsutil._parse_listing
+    assert parse(jvm, seq(st, located), "file:/d/") == [(name, 1234, 1700000000123)] * 2
+    assert parse(jvm, seq(st, status("file:/e/y.parquet")), "file:/d/") is None
+    assert parse(jvm, seq(), "file:/d/") == []
+
+    path, _ = sharded_db
+    listed = sorted(fsutil.list_data_files(spark, path))
+    monkeypatch.setattr(fsutil, "_parse_listing", lambda *args: None)
+    assert sorted(fsutil.list_data_files(spark, path)) == listed
+
+
+def test_open_of_an_indexed_dataset_runs_no_jobs(spark, sharded_db):
+    """``open`` lists the files without a job and reads with the schemas
+    ``build_index`` recorded: no Spark job, the same rows on the primary
+    and the index."""
+    path, rows = sharded_db
+    opened = []
+    assert _count_jobs(spark, "test-open-jobs",
+                       lambda: opened.append(TrailDataset.open(spark, path))) == 0
+    ds = opened[0]
+    assert ds._zindex is not None
+    got = sorted(map(tuple, ds.df.select("uuid", "time", "f").collect()))
+    assert got == sorted(rows)
+    routed = ds.with_filter(EventFilter().add_term("f", "x"))
+    assert routed._index_covers()
+    assert sorted(map(tuple, routed.df.select("uuid", "time", "f").collect())) == sorted(
+        r for r in rows if r[2] == "x")
+
+
+@pytest.mark.parametrize("time_shard", ["yyyy-MM-dd", "yyyy-MM-dd-HH", None])
+def test_recorded_schemas_equal_inferred(spark, tmp_path, time_shard):
+    """The schemas ``open`` reads with are the ones inference gives:
+    ``__shard`` is a date for daily shards, a string for hourly ones, and
+    absent from a flat layout; the index generation's likewise."""
+    from traildb_spark import normalize_events
+
+    rows = [(f"{u:032x}", _DAY0 + d * 86400 + u * 60, "xy"[u % 2])
+            for u in range(6) for d in range(3)]
+    path = str(tmp_path / "db")
+    TrailDataset(normalize_events(spark.createDataFrame(rows, ["uuid", "time", "f"]))
+                 ).finalize(path, num_buckets=2, time_shard=time_shard)
+    TrailDataset.build_index(spark, path, ["f"])
+    ds = TrailDataset.open(spark, path)
+    assert ds._raw.schema == spark.read.parquet(path).schema
+    zdf, _ = ds._zindex
+    assert zdf.schema == spark.read.parquet(zdf.inputFiles()[0]).schema
+    shard = {f.name: f.dataType.simpleString() for f in ds._raw.schema}.get("__shard")
+    assert shard == {"yyyy-MM-dd": "date", "yyyy-MM-dd-HH": "string", None: None}[time_shard]
+
+
+def test_file_added_outside_the_protocol_makes_schema_stale(spark, tmp_path):
+    """A parquet file with an extra column dropped into a shard changes
+    the listed digest: ``open`` warns "stale", infers the schema again
+    instead of reading with the recorded one, and returns the rows a
+    plain read returns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from traildb_spark import normalize_events
+
+    rows = [(f"{u:032x}", _DAY0 + d * 86400 + u * 60, "xy"[u % 2])
+            for u in range(6) for d in range(2)]
+    path = str(tmp_path / "db")
+    TrailDataset(normalize_events(spark.createDataFrame(rows, ["uuid", "time", "f"]))
+                 ).finalize(path, num_buckets=2, time_shard="yyyy-MM-dd")
+    TrailDataset.build_index(spark, path, ["f"])
+    pq.write_table(
+        pa.table({"uuid": ["f" * 32], "time": [_DAY0 + 5], "f": ["x"], "extra": ["e"]}),
+        os.path.join(path, "__shard=2024-01-01", "aaa-outside.parquet"))
+
+    opened = []
+    with pytest.warns(UserWarning, match="stale"):
+        jobs = _count_jobs(spark, "test-stale-open",
+                           lambda: opened.append(TrailDataset.open(spark, path)))
+    ds = opened[0]
+    assert jobs >= 1  # inferred, not read with the recorded schema
+    assert ds._zindex is None
+    plain = spark.read.parquet(path)
+    assert ds._raw.schema == plain.schema
+    assert sorted(map(tuple, ds._raw.collect())) == sorted(map(tuple, plain.collect()))
+    assert ds._raw.filter(F.col("uuid") == "f" * 32).count() == 1
 
 
 # --- finalized layout: range clustering ----------------------------------

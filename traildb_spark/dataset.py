@@ -20,6 +20,12 @@ is read — the file-level analog of the reference's binary search over
 sorted uuids (`src/tdb.c:552-589`); the rows of that one file are still
 scanned. Each footer is still opened: per-file uuid ranges recorded
 beside the data, for plan-time skipping, are ROADMAP item 3.
+
+``open`` of an indexed dataset runs no Spark job, as the reference's
+``tdb_open`` reads a header and scans nothing: ``build_index`` records the
+digests of the primary's and the index's files and both schemas in the
+``_traildb_meta.json`` sidecar, and ``open`` compares the digests with a
+listing that runs no job before reading with the recorded schemas.
 """
 
 from __future__ import annotations
@@ -31,6 +37,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import fsutil
 from .operators.filters import EventFilter, TimeRange, uuid_whitelist
@@ -139,6 +146,30 @@ def update_meta(spark: SparkSession, path: str, **entries) -> None:
     fsutil.swap_pointer(spark, meta_path, json.dumps(meta))
 
 
+def _read_parquet(spark: SparkSession, path: str, schema: dict | None) -> DataFrame:
+    """``path`` read with ``schema`` (a recorded ``StructType`` JSON
+    value), so no schema-inference job runs; inferred when None."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(path)
+
+
+def _read_zindex(
+    spark: SparkSession, zpath: str, zmeta: dict
+) -> tuple[DataFrame, list[str]] | None:
+    """The z-index generation at ``zpath`` and its columns, or None when
+    it is gone, its sidecar entry records no digest of its files, or the
+    files its read lists no longer match that digest."""
+    want = zmeta.get("index_fingerprint")
+    if want is None or not fsutil.exists(spark, zpath):
+        return None
+    zdf = _read_parquet(spark, zpath, zmeta.get("index_schema"))
+    if fsutil.data_fingerprint(spark, zpath, zdf) != want:
+        return None
+    return zdf, list(zmeta["columns"])
+
+
 @dataclass
 class TrailInfo:
     """The reference's ``info`` metadata block (`src/tdb.c:677-700`)."""
@@ -236,45 +267,52 @@ class TrailDataset:
         there by the ``df`` property. ``use_index=False`` is the
         reference's ``--no-index`` opt-out (`tdbcli/main.c:72-74`).
 
-        Sidecar read and data-file listing go through ``fsutil`` (Hadoop
-        FS API and a Spark file listing), so discovery works identically
-        on file://, hdfs:// and s3a:// — the same posture as
-        ``compact_shards`` and the streaming sinks."""
-        shard_fmt = None
-        zindex = None
-        raw = fsutil.read_small(spark, f"{path}/{META_FILE}")
-        if raw is not None:
-            meta = json.loads(raw)
-            shard_fmt = meta.get("time_shard")
-            zmeta = meta.get("zindex")
-            if use_index and zmeta and zmeta.get("columns"):
-                zpath = f"{path}/{zmeta.get('path', ZINDEX_DIR)}"
-                # consistency guard (reference index↔data checksum,
-                # tdb_index.c:439-451): if the primary data changed
-                # since the index was built, routing would substitute
-                # STALE rows — ignore the index instead
-                fresh = zmeta.get("data_fingerprint") == fsutil.data_fingerprint(
-                    spark, path
-                )
-                if fresh and fsutil.exists(spark, zpath):
-                    zindex = (
-                        spark.read.parquet(zpath),
-                        list(zmeta["columns"]),
-                    )
-                elif not fresh:
-                    # surface the hidden perf cliff: the sidecar records
-                    # an index but the data changed since it was built
-                    # (or mtimes weren't preserved by a copy) — filters
-                    # will full-scan until `tdb index` is re-run
-                    import warnings
+        Like the reference, an indexed dataset opens from metadata alone:
+        no Spark job runs. The primary's data files are listed without a
+        job (``fsutil.data_fingerprint``) and compared with the digest
+        ``build_index`` recorded; while they match, both reads take the
+        schemas recorded beside it instead of inferring them (a job
+        each). The index is routed to only when its own files, listed by
+        its read, match their recorded digest too. Either mismatch warns,
+        and the index is ignored; a changed primary is read with
+        inference. Without a recorded index the primary's schema is
+        inferred (one job).
 
-                    warnings.warn(
-                        f"z-index at {zpath} is stale (data fingerprint "
-                        "mismatch) and will be ignored; re-run "
-                        "`tdb index` to restore pruning",
-                        stacklevel=2,
-                    )
-        return cls(spark.read.parquet(path), shard_fmt=shard_fmt, zindex=zindex)
+        Sidecar read and data-file listing go through ``fsutil`` (Hadoop
+        FS API and Spark's own file index), so discovery works
+        identically on file://, hdfs:// and s3a:// — the same posture as
+        ``compact_shards`` and the streaming sinks."""
+        raw = fsutil.read_small(spark, f"{path}/{META_FILE}")
+        meta = json.loads(raw) if raw is not None else {}
+        zmeta = meta.get("zindex") or {}
+        # consistency guard (reference index↔data checksum,
+        # tdb_index.c:439-451): if the primary data changed since the
+        # index was built, routing would substitute STALE rows and the
+        # recorded schema may no longer be the data's
+        fresh = bool(zmeta) and zmeta.get(
+            "data_fingerprint") == fsutil.data_fingerprint(spark, path)
+        primary = _read_parquet(
+            spark, path, zmeta.get("data_schema") if fresh else None)
+        zindex = None
+        if use_index and zmeta.get("columns"):
+            zpath = f"{path}/{zmeta.get('path', ZINDEX_DIR)}"
+            zindex = _read_zindex(spark, zpath, zmeta) if fresh else None
+            if zindex is None:
+                # surface the hidden perf cliff: filters will full-scan
+                # until `tdb index` is re-run (a copy that did not keep
+                # mtimes lands here too)
+                import warnings
+
+                why = (
+                    "its files changed since it was built, or it records "
+                    "no digest of them" if fresh else "data fingerprint mismatch"
+                )
+                warnings.warn(
+                    f"z-index at {zpath} is stale ({why}) and will be "
+                    "ignored; re-run `tdb index` to restore pruning",
+                    stacklevel=2,
+                )
+        return cls(primary, shard_fmt=meta.get("time_shard"), zindex=zindex)
 
     @classmethod
     def open_tdb(
@@ -720,7 +758,12 @@ class TrailDataset:
         ``{"zindex": {"path": "_zindex/_g<N>", "columns": [...]}}`` in
         the ``_traildb_meta.json`` sidecar so ``open()`` discovers it
         (reference auto-discovery, `tdbcli/tdb_index.c:637-662`) and the
-        ``df`` router sends covered CNF filters to it. The sidecar write
+        ``df`` router sends covered CNF filters to it. The entry also
+        records the digests of the primary's files
+        (``data_fingerprint``) and of the generation's
+        (``index_fingerprint``) and both schemas (``data_schema``,
+        ``index_schema``): while the digests hold, ``open`` reads with
+        those schemas and runs no Spark job. The sidecar write
         is the commit, as in ``fsutil.load_artifact``: a crash before it
         leaves the previous index serving, and only after it are the
         superseded generations (and a legacy flat ``_zindex``) swept.
@@ -747,8 +790,14 @@ class TrailDataset:
                 "path": f"{ZINDEX_DIR}/{gen}",
                 "columns": list(cols),
                 # ties the index to THIS data: open() drops the index when
-                # the primary's files change (stale-index guard)
+                # the primary's files change (stale-index guard) ...
                 "data_fingerprint": fsutil.data_fingerprint(spark, db_path),
+                # ... or when the generation's own files do
+                "index_fingerprint": fsutil.data_fingerprint(spark, zpath),
+                # what open() would infer; the generation holds the
+                # columns of ds.df, a projection of a Parquet read
+                "data_schema": ds._raw.schema.jsonValue(),
+                "index_schema": ds.df.schema.jsonValue(),
             },
         )
         fsutil.sweep_generations(spark, root, {gen})
@@ -807,11 +856,12 @@ def import_package(spark: SparkSession, package_path: str,
                    out_dir: str) -> str:
     """Extract a `.tdbx` package into ``out_dir`` and verify every
     member against the manifest (path + size). Tar stores mtimes at
-    second precision while the z-index fingerprint uses milliseconds,
-    so a recorded index fingerprint is recomputed against the extracted
-    files — index and data came from the same package, so re-tying them
-    is sound (the alternative is a guaranteed false-stale warning on
-    every import)."""
+    second precision while the z-index fingerprints use milliseconds,
+    so the recorded digests of the primary's and of the index
+    generation's files are recomputed against the extracted files —
+    index and data came from the same package, so re-tying them is
+    sound (the alternative is a guaranteed false-stale warning on every
+    import). An entry that records no generation digest gets none."""
     import tarfile
 
     with tarfile.open(package_path, "r") as tf:
@@ -846,15 +896,17 @@ def import_package(spark: SparkSession, package_path: str,
             f"package extracted unmanifested files {sorted(extra)[:5]} — "
             "refusing (out_dir must start empty)"
         )
-    # re-tie the z-index to the extracted files' fingerprint
+    # re-tie the z-index to the extracted files' fingerprints
     meta_path = os.path.join(out_dir, META_FILE)
     if os.path.isfile(meta_path):
         with open(meta_path, "r", encoding="utf-8") as f:
             meta = json.load(f)
-        if meta.get("zindex"):
-            meta["zindex"]["data_fingerprint"] = fsutil.data_fingerprint(
-                spark, out_dir
-            )
+        zmeta = meta.get("zindex")
+        if zmeta:
+            zmeta["data_fingerprint"] = fsutil.data_fingerprint(spark, out_dir)
+            if "index_fingerprint" in zmeta:
+                zmeta["index_fingerprint"] = fsutil.data_fingerprint(
+                    spark, f"{out_dir}/{zmeta.get('path', ZINDEX_DIR)}")
             with open(meta_path, "w", encoding="utf-8") as f:
                 json.dump(meta, f, sort_keys=True)
             crc = os.path.join(out_dir, f".{META_FILE}.crc")
@@ -1111,9 +1163,10 @@ def dataset_file_stats(spark: SparkSession, path: str) -> DataFrame:
     open cost on every scan — the streaming-finalize accumulation
     pattern this report exists to catch.
 
-    Pure metadata: one Spark file listing that reads no file content
-    (`fsutil.list_data_files` — the same primary-data-file rules as the
-    fingerprint, so hidden/index subtrees never skew the stats),
+    Pure metadata: one file listing that runs no Spark job
+    and reads no file content (`fsutil.list_data_files` — the same
+    primary-data-file rules as the fingerprint, so hidden/index subtrees
+    never skew the stats),
     file-count-sized driver state, scheme-agnostic (file://, hdfs://,
     s3a://). Returns a DataFrame for composability with the rest of the
     reporting surface.

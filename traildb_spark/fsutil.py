@@ -98,21 +98,22 @@ def _digest(entries) -> str:
     return h.hexdigest()
 
 
-def data_fingerprint(spark, path: str) -> str:
+def data_fingerprint(spark, path: str, df=None) -> str:
     """Cheap metadata fingerprint of a dataset's PRIMARY data files:
     md5 over the sorted (relative path, size, modification-time ms) list
-    from :func:`list_data_files`. The shared consistency token tying an
-    auxiliary artifact (z-index, persisted index subdirs) to the data it
-    was built from — the analog of the reference's index↔data checksum
-    (`tdbcli/tdb_index.c:439-451`). mtime closes the same-name/same-size
-    rewrite hole; the false-stale direction (a copy without preserved
-    mtimes) only invalidates the artifact, never correctness. Goes
-    through the Hadoop FS API so build-time and open-time fingerprints
-    agree on any filesystem, not just file://."""
-    return _digest(list_data_files(spark, path))
+    from :func:`list_data_files` (``df`` as there). The shared
+    consistency token tying an auxiliary artifact (z-index, persisted
+    index subdirs) to the data it was built from — the analog of the
+    reference's index↔data checksum (`tdbcli/tdb_index.c:439-451`).
+    mtime closes the same-name/same-size rewrite hole; the false-stale
+    direction (a copy without preserved mtimes) only invalidates the
+    artifact, never correctness. Goes through the Hadoop FS API so
+    build-time and open-time fingerprints agree on any filesystem, not
+    just file://."""
+    return _digest(list_data_files(spark, path, df))
 
 
-def list_data_files(spark, path: str) -> Iterator[tuple[str, int, int]]:
+def list_data_files(spark, path: str, df=None) -> Iterator[tuple[str, int, int]]:
     """Yield (relative path, size, modification-time ms) for every
     PRIMARY parquet data file under ``path``, recursively.
 
@@ -120,41 +121,86 @@ def list_data_files(spark, path: str) -> Iterator[tuple[str, int, int]]:
     _zindex, _staging, _traildb_commits, _SUCCESS, checksums) are
     skipped, but Hive partition dirs are KEPT even when they start with
     '_' — time shards are named '__shard=<v>', and excluding them would
-    make a sharded dataset look empty to the fingerprint.
+    make a sharded dataset look empty to the fingerprint. Only names
+    ending in ``.parquet`` count.
 
-    The entries come from ONE Spark listing, not a py4j round trip per
-    file: a ``binaryFile`` read of ``*.parquet`` that selects only path,
-    length and modification time, so no file content is read. Spark's
-    listing already drops '.'/'_' names (except Hive dirs and
-    ``_metadata``) and in-flight ``._COPYING_`` paths, which no Spark read
-    of the dataset sees either; the rules above are re-applied to its
-    output."""
-    from pyspark.sql import functions as F
-
-    _, hpath, fs = hfs(spark, path)
+    The entries come from the file index Spark builds when a file source
+    is loaded — a ``binaryFile`` reader over ``path``, or ``df``, a read
+    of ``path`` the caller already holds — so no Spark job runs (Spark
+    lists more than 32 subdirs of one dir with a job) and no file
+    content is read. Spark's listing already drops '.'/'_' names
+    (except Hive dirs and ``_metadata``) and in-flight ``._COPYING_``
+    paths, which no Spark read of the dataset sees either; the rules
+    above are re-applied to its output. A flat read's index holds only
+    the top-level files, so for ``df`` the rules apply to what that read
+    scans."""
+    jvm, hpath, fs = hfs(spark, path)
     root = hpath(path)
-    if not fs.exists(root):
-        return
+    if df is None:
+        if not fs.exists(root):
+            return
+        df = (
+            spark.read.format("binaryFile")
+            .option("recursiveFileLookup", "true")
+            .load(path)
+        )
     prefix = fs.makeQualified(root).toString().rstrip("/") + "/"
-    listing = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .load(path)
-        .select("path", "length", F.unix_millis("modificationTime").alias("mtime"))
-        .collect()
-    )
-    for p, size, mtime in listing:
-        if not p.startswith(prefix):
-            continue
-        rel = p[len(prefix):]
+    files = df._jdf.queryExecution().analyzed().relation().location().allFiles()
+    entries = _parse_listing(jvm, files, prefix)
+    if entries is None:  # a FileStatus whose toString is not Hadoop's
+        entries, it = [], files.iterator()
+        while it.hasNext():
+            st = it.next()
+            p = str(st.getPath().toString())
+            if p.startswith(prefix):
+                entries.append((p[len(prefix):], int(st.getLen()),
+                                int(st.getModificationTime())))
+    for rel, size, mtime in entries:
         parts = rel.split("/")
-        if parts[-1].startswith((".", "_")) or any(
-            d.startswith(".") or (d.startswith("_") and "=" not in d)
-            for d in parts[:-1]
+        if (
+            not parts[-1].endswith(".parquet")
+            or parts[-1].startswith((".", "_"))
+            or any(
+                d.startswith(".") or (d.startswith("_") and "=" not in d)
+                for d in parts[:-1]
+            )
         ):
             continue
-        yield rel, int(size), int(mtime)
+        yield rel, size, mtime
+
+
+# One file's Hadoop FileStatus.toString, whose path starts with the quoted
+# root %s; subclasses (LocatedFileStatus, S3AFileStatus) keep this form.
+# Records are NUL-separated (no path holds NUL); the greedy path group
+# keeps a '; ' inside a name.
+_FILE_STATUS = (
+    "[^\\x00]*?\\{path=%s([^\\x00]*); isDirectory=false; length=(\\d+); "
+    "replication=\\d+; blocksize=\\d+; modification_time=(-?\\d+); "
+    "access_time=[^\\x00]*"
+)
+_ENTRY = re.compile(r"(.*)\t(\d+)\t(-?\d+)", re.S | re.A)
+
+
+def _parse_listing(jvm, files, prefix: str) -> list[tuple[str, int, int]] | None:
+    """(path relative to ``prefix``, length, modification-time ms) of each
+    FileStatus in the Scala collection ``files``; None when any record is
+    not a file under ``prefix`` in Hadoop's ``toString`` form.
+
+    A Java regex cuts each record down to those three fields before the
+    text crosses py4j as ONE string, not three getter calls a file: a
+    py4j reply longer than 8 KB waits ~40 ms for a delayed TCP ack, and
+    the cut keeps small listings under that (33 files: ~3 KB)."""
+    listing = files.addString(jvm.scala.collection.mutable.StringBuilder(), "\0")
+    pattern = jvm.java.util.regex.Pattern.compile(
+        _FILE_STATUS % jvm.java.util.regex.Pattern.quote(prefix))
+    text = pattern.matcher(listing).replaceAll("$1\t$2\t$3")
+    out = []
+    for rec in text.split("\0") if text else ():
+        m = _ENTRY.fullmatch(rec)
+        if m is None:
+            return None
+        out.append((m.group(1), int(m.group(2)), int(m.group(3))))
+    return out
 
 
 # -- artifacts beside the data -------------------------------------------
