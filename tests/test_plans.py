@@ -1101,3 +1101,24 @@ def test_q267_routes_through_zindex(spark):
         ).collect()
     )
     assert got == want and len(got) > 0
+
+
+def test_driver_built_frames_plan_local_scans(spark, tmp_path):
+    """The .tdb range list and a whitelist longer than the pushed-``In``
+    limit are driver-built frames: they plan a ``LocalTableScan``, not a
+    ``Scan ExistingRDD`` that runs Python tasks each time it is read."""
+    from traildb_spark.operators.filters import MAX_PUSHED_UUIDS
+    from traildb_spark.sources.tdbfile import write_tdb
+
+    path = str(tmp_path / "plan.tdb")
+    write_tdb([(f"{i:032x}", 100 + t, f"v{t}") for i in range(20) for t in range(3)],
+              ["v"], path, package=True)
+    ds = TrailDataset.open_tdb(spark, path)
+    wl = [f"{i:032x}" for i in range(300)]
+    assert len(wl) > MAX_PUSHED_UUIDS
+    for df, n in ((ds.df, 60), (ds.select_uuids(wl).df, 60)):
+        assert df.count() == n
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+        assert "LocalTableScan" in plan, plan

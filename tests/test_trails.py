@@ -254,6 +254,31 @@ def test_apply_to_trails_chunked_rejects_bad_chunk_size(spark):
         )
 
 
+def test_session_stats_chunked_runs_full_width(spark):
+    """The walker's shuffle names its partition count, so AQE does not
+    coalesce a small input's fold into one task: the mapInPandas stage
+    runs ``spark.sql.shuffle.partitions`` tasks, and the output still
+    equals the window formulation."""
+    rows = [(f"{i:032x}", 1000 * t + 7 * i) for i in range(50) for t in range(1 + i % 5)]
+    df = spark.createDataFrame(rows, ["uuid", "time"])
+    sc = spark.sparkContext
+    group = "session_stats_chunked_width"
+    sc.setJobGroup(group, group)
+    try:
+        got = sorted(tuple(r) for r in trails.session_stats_chunked(df, gap=1500).collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    stages = [tracker.getStageInfo(s)
+              for j in tracker.getJobIdsForGroup(group)
+              for s in tracker.getJobInfo(j).stageIds]
+    fold = max((s for s in stages if s is not None), key=lambda s: s.stageId)
+    assert fold.numTasks == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    want = sorted(tuple(r) for r in trails.session_stats(df, gap=1500).collect())
+    assert got == want and len(got) == 50
+
+
 def test_trail_similarity_pairs_exact_jaccard(spark):
     from traildb_spark.operators import trails as T
 

@@ -5,8 +5,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def uuid_hex(raw: Column) -> Column:
@@ -76,3 +77,14 @@ def json_field(col: Column, path: str) -> Column:
     ``json_extract_string(col, '$.key')``), so typed extraction
     (``.cast("long")``) is oracle-checkable end to end."""
     return F.get_json_object(col, path)
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small driver-built frame (``rows`` of tuples, ``schema`` in DDL)
+    that plans as a ``LocalTableScan``. ``createDataFrame`` of a list
+    plans ``Scan ExistingRDD``, which runs Python tasks every time the
+    frame is evaluated; a pandas frame goes through Arrow instead."""
+    import pandas as pd
+
+    st = StructType.fromDDL(schema)
+    return spark.createDataFrame(pd.DataFrame.from_records(rows, columns=st.names), st)

@@ -17,7 +17,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.core import md5_60
+from ..functions.core import local_frame, md5_60
 
 
 
@@ -1023,9 +1023,7 @@ def connected_components(
         # the distributed path below handles them — the fast path must
         # not flip behavior on data volume)
         id_t = edges.schema["src"].dataType.simpleString()
-        return pairs.sparkSession.createDataFrame(
-            out, f"id {id_t}, component {id_t}"
-        )
+        return local_frame(pairs.sparkSession, out, f"id {id_t}, component {id_t}")
 
     # distributed path: large-star/small-star alternation
     edges = _materialize(edges)

@@ -41,6 +41,8 @@ from typing import Union
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.core import local_frame
+
 TIME_COL = "time"
 
 
@@ -273,7 +275,7 @@ def uuid_whitelist(df: DataFrame, uuids: list[str] | DataFrame, uuid_col: str = 
     wanted = sorted({u.lower() for u in uuids})
     if len(wanted) <= MAX_PUSHED_UUIDS:
         return df.filter(F.col(uuid_col).isin(wanted))
-    wl = df.sparkSession.createDataFrame([(u,) for u in wanted], f"{uuid_col} string")
+    wl = local_frame(df.sparkSession, [(u,) for u in wanted], f"{uuid_col} string")
     return df.join(F.broadcast(wl), uuid_col, "left_semi")
 
 

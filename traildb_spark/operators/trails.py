@@ -3,7 +3,7 @@
 The reference's primary API is "iterate one trail's events in time order"
 (`src/tdb_decode.c:122-329`, `src/traildb.h:300-326`). Spark-native
 equivalents: window functions over ``partitionBy(uuid).orderBy(time)``, and
-one sorted-run walker for arbitrary trail programs (``repartition(uuid)`` →
+one sorted-run walker for arbitrary trail programs (``repartition(n, uuid)`` →
 ``sortWithinPartitions(uuid, time)`` → ``mapInPandas``, sliced on uuid
 change): ``apply_to_trails_chunked`` runs a fold over it and
 ``apply_to_trails`` a whole-trail function. Every operator here is
@@ -294,12 +294,16 @@ def apply_to_trails_chunked(
     O(buffer + its own state). ``apply_to_trails`` is the whole-trail
     fold on this walker — fine to ~10M events (measured, SCALE.md), but
     a 100M+-event whale pressures one executor. Here the trail never
-    materializes: events are hash-clustered per uuid, externally sorted
-    within partitions by (uuid, time) — shuffle spill keeps the sort
-    disk-backed — and ``mapInPandas`` walks the partition's Arrow batches
-    in order, slicing on uuid boundaries and threading the user's state
-    across consecutive chunks of the same trail. Peak memory is one Arrow
-    batch plus the fold state, independent of trail length.
+    materializes: events are hash-clustered per uuid into
+    ``spark.sql.shuffle.partitions`` partitions (an explicit count, which
+    AQE does not coalesce, so a small input still folds on every core),
+    externally sorted within partitions by (uuid, time) — shuffle spill
+    keeps the sort disk-backed — and ``mapInPandas`` walks the
+    partition's Arrow batches in order, slicing on uuid boundaries and
+    threading the user's state across consecutive chunks of the same
+    trail. The outputs of one input batch leave as one frame, in order.
+    Peak memory is one Arrow batch, its output and the fold state,
+    independent of trail length.
 
     User contract (a fold, not a whole-trail function):
       - ``init(uuid) -> state`` — called at the first chunk of each trail
@@ -325,18 +329,25 @@ def apply_to_trails_chunked(
 
     def run(batches):
         import numpy as np
+        import pandas as pd
 
         cur_uuid = None
         started = False
         state = None
 
-        def emit(out):
-            return out is not None and len(out) > 0
+        def frame(outs):
+            # one output frame per input batch: PySpark converts each
+            # yielded frame to its own Arrow batch
+            outs = [o for o in outs if o is not None and len(o) > 0]
+            if len(outs) > 1:
+                return pd.concat(outs, ignore_index=True)
+            return outs[0] if outs else None
 
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
+            outs = []
             ids = pdf[uuid_col].to_numpy()
             change = np.flatnonzero(ids[1:] != ids[:-1]) + 1
             starts = np.concatenate(([0], change)).astype(np.int64)
@@ -345,27 +356,26 @@ def apply_to_trails_chunked(
                 u = ids[s]
                 if not started or u != cur_uuid:
                     if started:
-                        out = finish(state)
-                        if emit(out):
-                            yield out
+                        outs.append(finish(state))
                     cur_uuid = u
                     started = True
                     state = init(u)
-                if chunk_size is None:
-                    state, out = step(state, pdf.iloc[s:e])
-                    if emit(out):
-                        yield out
-                else:
-                    for cs in range(s, e, chunk_size):
-                        state, out = step(state, pdf.iloc[cs : min(cs + chunk_size, e)])
-                        if emit(out):
-                            yield out
+                size = chunk_size or e - s
+                for cs in range(s, e, size):
+                    state, out = step(state, pdf.iloc[cs : min(cs + size, e)])
+                    outs.append(out)
+            out = frame(outs)
+            if out is not None:
+                yield out
         if started:
-            out = finish(state)
-            if emit(out):
+            out = frame([finish(state)])
+            if out is not None:
                 yield out
 
-    clustered = df.repartition(uuid_col).sortWithinPartitions(uuid_col, time_col)
+    # an explicit partition count: AQE never coalesces it, so the fold
+    # runs spark.sql.shuffle.partitions wide even on a small input
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    clustered = df.repartition(n, uuid_col).sortWithinPartitions(uuid_col, time_col)
     return clustered.mapInPandas(run, schema=schema)
 
 

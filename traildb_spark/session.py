@@ -10,12 +10,39 @@ shuffle-partition count that callers override per deployment.
 from __future__ import annotations
 
 import os
+import site
+import tempfile
 
 import pyspark
 from pyspark.sql import SparkSession
 
 # Local test parallelism; a real deployment overrides via spark-submit conf.
 _DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
+# A worker socket is <dir>/.<uuid4>.sock and Linux caps the path at 107 bytes.
+_MAX_SOCKET_DIR = 64
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _workers_import_package() -> bool:
+    """Whether a local Python worker can import this package when it
+    starts: it gets the driver's PYTHONPATH, working directory and
+    site-packages, not a ``sys.path`` the driver changed at run time."""
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+            *site.getsitepackages(), site.getusersitepackages()]
+    return any(d and os.path.abspath(d) == _PACKAGE_ROOT for d in dirs)
+
+
+def _python_worker_conf(tmpdir: str, daemon: bool) -> dict[str, str]:
+    """The conf that takes the fixed costs out of local Python tasks:
+    the package's worker daemon (no per-task zip re-read) and Unix-domain
+    worker sockets in ``tmpdir`` when its socket paths fit in bytes."""
+    conf = {}
+    if daemon:
+        conf["spark.python.daemon.module"] = "traildb_spark.worker_daemon"
+    if len(os.fsencode(tmpdir)) <= _MAX_SOCKET_DIR:
+        conf["spark.python.unix.domain.socket.enabled"] = "true"
+        conf["spark.python.unix.domain.socket.dir"] = tmpdir
+    return conf
 
 
 def get_spark(app_name: str = "traildb-spark", master: str | None = None) -> SparkSession:
@@ -26,6 +53,24 @@ def get_spark(app_name: str = "traildb-spark", master: str | None = None) -> Spa
     problem, cf. reference doc/docs/technical_overview.md:65-71), and
     partition coalescing keeps small-SF test runs from drowning in empty
     tasks without hurting large inputs.
+
+    On a local master it also removes two fixed costs from every Python
+    task (pandas UDFs, ``mapInPandas``, RDD functions):
+
+    - the per-task zip re-read: ``spark.python.daemon.module`` is
+      :mod:`traildb_spark.worker_daemon` (~100-200 ms a task on CPython
+      < 3.13). Set only when a starting worker can import this package
+      (on its PYTHONPATH, in the working directory or in site-packages);
+      otherwise the stock daemon runs;
+    - the ~40 ms loopback-TCP stall before a task's first Arrow batch:
+      ``spark.python.unix.domain.socket.enabled`` with the sockets in
+      ``tempfile.gettempdir()`` (Spark >= 4.1). A socket path is
+      ``<dir>/.<uuid4>.sock`` and Linux allows 107 bytes, so a temp dir
+      longer than 64 bytes leaves the workers on TCP.
+
+    A cluster master gets neither: the driver cannot see whether the
+    executors can import the package or own the temp dir; pass the confs
+    through ``spark-submit`` there.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -48,14 +93,16 @@ def get_spark(app_name: str = "traildb-spark", master: str | None = None) -> Spa
         # failing expression.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
+    if not master and not os.environ.get("SPARK_MASTER"):
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     if master:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        builder = builder.master(f"local[{cpus}]")
     # Spark <= 4.0 rejects parquet INT64 TIMESTAMP(NANOS) unless this legacy
     # conf reads it as LONG nanos; Spark >= 4.1 dropped the conf and reads
     # TIMESTAMP_NTZ natively. functions.core.ts_seconds handles both dtypes.
     if tuple(int(x) for x in pyspark.__version__.split(".")[:2]) < (4, 1):
         builder = builder.config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if master and master.startswith("local"):
+        builder = builder.config(
+            map=_python_worker_conf(tempfile.gettempdir(), _workers_import_package()))
     return builder.getOrCreate()

@@ -720,6 +720,8 @@ def read_tdb(spark, path: str, target_bytes: int = 32 << 20):
     / trails.toc / uuids (worker memory O(range + vocab)). The path
     must be visible to executors (local/shared FS — the reference's own
     deployment contract for mmap)."""
+    from ..functions.core import local_frame
+
     meta = TdbMeta(path)
     abspath = os.path.abspath(meta.path)
     names = meta.field_names[1:]
@@ -769,7 +771,7 @@ def read_tdb(spark, path: str, target_bytes: int = 32 << 20):
                         yield out
                     sub = sub_end
 
-    rdf = spark.createDataFrame(ranges, "start long, end long")
+    rdf = local_frame(spark, ranges, "start long, end long")
     rdf = rdf.repartition(min(len(ranges), 64))
     return rdf.mapInPandas(decode, schema)
 
